@@ -13,8 +13,13 @@ tested elsewhere):
                           verification (`dedup.lsh_verified_pairs`) — the
                           100 TB path: banded candidate join, verification
                           linear in the candidate count, never an
-                          inverted-index self-join
-4. decontamination      — drop docs overlapping the probe/eval set
+                          inverted-index self-join.  Shingling splits
+                          each doc once; components run at most
+                          max_iter rounds, round 1 fused with the initial
+                          labels
+4. decontamination      — drop docs overlapping the probe/eval set:
+                          corpus shingles probe the broadcast probe index
+                          first, distinct only on the matches
 5. tokenize + pack      — token counts, then greedy sequence packing
 6. write                — parquet, optionally Z-ordered on (pack_id, n_tokens)
 

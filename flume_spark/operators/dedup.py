@@ -11,6 +11,15 @@ Scale design (100 TB corpus):
 - MinHash-LSH: per-doc signature (k aggregates over exploded shingles),
   banding, then a join keyed on (band_idx, band_hash) — shuffle bounded by
   bucket sizes; collision probability tunable via (k, bands).
+- Shingling tokenizes each document ONCE, in a projection below the
+  per-position slice lambda (Catalyst never hoists out of a lambda, so a
+  split inside it would re-split the document per shingle: O(words^2)).
+- decontamination is probe-first: corpus shingles join the broadcast probe
+  index un-deduplicated and only the small joined result is made distinct,
+  so no shuffle of the full corpus shingle table.
+- connected components: one materialization of the symmetric edge set,
+  round 1 fused with the initial labels (one groupBy), then at most
+  max_iter - 1 join+groupBy rounds.
 - All hashing is md5-based (string min = lexicographic) so results are
   deterministic and engine-independent — no seed-dependent JVM hash.
 """
@@ -83,9 +92,15 @@ def word_shingles(
     min over its set) — it removes a full shuffle of the exploded table,
     the largest intermediate in the pipeline.
     """
-    shingle_arr = shingle_array_expr(f"split(lower(trim({text_col})), '\\\\s+')", n)
-    exploded = _spread(df).select(
-        F.col(id_col).alias("id"), F.explode(shingle_arr).alias("shingle")
+    # Tokenize in its own projection: Catalyst never hoists an expression
+    # out of a lambda, so a split inside the per-position slice would re-split
+    # the whole document once per shingle (O(words^2) per doc).
+    words = _spread(df).select(
+        F.col(id_col).alias("id"),
+        F.expr(f"split(lower(trim({text_col})), '\\\\s+')").alias("_w"),
+    )
+    exploded = words.select(
+        "id", F.explode(shingle_array_expr("_w", n)).alias("shingle")
     )
     return exploded.distinct() if distinct else exploded
 
@@ -597,7 +612,8 @@ def connected_components(
     near-transitive), so a handful of rounds suffices; each round is one
     join + one groupBy — all distributed, the driver only checks the
     changed-count scalar.  localCheckpoint() per round truncates the
-    exponentially-growing lineage.
+    exponentially-growing lineage.  `max_iter` caps the rounds, the first
+    included.
     """
     # The min-label algorithm and its decimal convergence sum both require
     # NUMERIC node ids on BOTH sides (a string id would widen the union to
@@ -610,20 +626,16 @@ def connected_components(
                 f"connected_components requires integer node ids; {col} is "
                 f"{dtypes[col]} — hash string keys to int64 (e.g. xxhash64) first"
             )
-    # Materialize the (possibly expensive) edge plan once — the two-sided
-    # union below would otherwise recompute it twice in the same job.
-    edges = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint()
+    # One materialization of the symmetric edge set.  The edge plan (often
+    # an expensive pair pipeline) appears on both sides of the union, but the
+    # two sides are the same subtree, so their exchanges are reused.
     bidir = (
-        edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .unionByName(
+            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+        )
         .distinct()
         .localCheckpoint()
-    )
-    labels = (
-        bidir.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
     )
     # Convergence scalar: labels only ever decrease, so the label sum strictly
     # decreases iff any node changed.  Summed as decimal(38,0): a bigint sum
@@ -640,10 +652,24 @@ def connected_components(
     # pipeline, funnel, training-run capstone).
     from pyspark.sql import Observation
 
-    obs0 = Observation()
-    labels = labels.observe(obs0, label_sum.alias("s")).localCheckpoint()
-    prev_sum = obs0.get["s"]
-    for _ in range(max_iter):
+    # Round 1 from the initial labels (label = node) is, for the symmetric
+    # bidir, each node's min over itself and its neighbors — one groupBy, so
+    # the initial labels never materialize.  Its observation carries the
+    # initial sum too (sum of nodes), for the first convergence test.
+    obs = Observation()
+    labels = (
+        bidir.groupBy(F.col("src").alias("node"))
+        .agg(F.min(F.least("src", "dst")).alias("label"))
+        .observe(
+            obs,
+            label_sum.alias("s"),
+            F.sum(F.col("node").cast("decimal(38,0)")).alias("s0"),
+        )
+        .localCheckpoint()
+    )
+    prev_sum = obs.get["s"]
+    rounds_left = max_iter - 1 if prev_sum != obs.get["s0"] else 0
+    for _ in range(rounds_left):
         # Min-label propagation with pointer jumping: each node takes the min
         # over {its own label, neighbor labels, its label's label}.  The
         # grandparent term doubles the propagation distance per round, so
@@ -786,16 +812,21 @@ def contamination_pairs(
 
     The scale shape is an inverted-index semi-structure: the probe side is
     a benchmark — thousands of docs, not billions — so its shingle index
-    broadcasts, and the corpus-side scan stays a map-stage join with one
-    (corpus_id, probe_id) aggregation shuffle.  No corpus self-join ever
+    broadcasts, and the corpus-side scan stays a map-stage join.  Probe
+    first: the corpus shingles are NOT made distinct before the join (that
+    would shuffle every corpus shingle); the join keeps only shingles some
+    probe holds, and the distinct runs on that small result, so n_shared
+    still counts distinct shared shingles.  No corpus self-join ever
     happens, so cost is linear in corpus shingles.
 
     Returns (doc_id, probe_id, n_shared), one row per contaminated pair.
     """
-    cs = word_shingles(corpus, id_col, text_col, n).withColumnRenamed("id", "doc_id")
+    cs = word_shingles(corpus, id_col, text_col, n, distinct=False)
     ps = word_shingles(probes, id_col, text_col, n).withColumnRenamed("id", "probe_id")
     return (
-        cs.join(F.broadcast(ps), "shingle")
+        cs.withColumnRenamed("id", "doc_id")
+        .join(F.broadcast(ps), "shingle")
+        .distinct()
         .groupBy("doc_id", "probe_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)

@@ -373,16 +373,24 @@ def rolling_fingerprint(
     window count.  md5 stands in for the polynomial rolling hash so the
     fingerprint is engine-independent; a production kernel would use a true
     O(n) Rabin-Karp in a pandas UDF, same contract."""
-    kgrams = F.expr(
-        f"transform(sequence(1, greatest(length(regexp_replace(lower({text_col}),"
-        f" '[^a-z0-9]', '')) - {k - 1}, 1)),"
-        f" i -> md5(substring(regexp_replace(lower({text_col}), '[^a-z0-9]', ''),"
-        f" i, {k})))"
-    )
-    return df.select(
+    # Normalize, then hash the windows, each in its own projection: an
+    # expression inside the lambda would rerun per window (O(chars^2) per
+    # doc), and one feeding both aggregates below would run twice.
+    norm = df.select(
         F.col(id_col),
-        F.array_min(kgrams).alias("min_hash"),
-        F.size(F.array_distinct(kgrams)).alias("n_distinct_windows"),
+        F.expr(f"regexp_replace(lower({text_col}), '[^a-z0-9]', '')").alias("_norm"),
+    )
+    kgrams = norm.select(
+        F.col(id_col),
+        F.expr(
+            f"transform(sequence(1, greatest(length(_norm) - {k - 1}, 1)),"
+            f" i -> md5(substring(_norm, i, {k})))"
+        ).alias("_g"),
+    )
+    return kgrams.select(
+        F.col(id_col),
+        F.array_min("_g").alias("min_hash"),
+        F.size(F.array_distinct("_g")).alias("n_distinct_windows"),
     )
 
 

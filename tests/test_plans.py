@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -267,6 +268,39 @@ def test_lsh_verified_no_inverted_self_join(spark):
     plan = explained(spark, "dedup_lsh_verified")
     assert n_nodes(plan, "CartesianProduct") == 0
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The argument text of every lambdafunction(...) in a plan string."""
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[m.end() : i - 1])
+    return bodies
+
+
+def test_lsh_verified_tokenizes_once(spark, monkeypatch):
+    """Shingling splits each document once, in a projection below the
+    per-position lambda: Catalyst never hoists an expression out of a
+    lambda, so a split inside it re-tokenizes the whole document per
+    shingle (O(words^2) per doc).  The shingle index is materialized by
+    localCheckpoint, so the plans of checkpointed frames are checked too."""
+    df_cls = type(spark.range(1))
+    real = df_cls.localCheckpoint
+    plans = []
+
+    def recording(self, *args, **kwargs):
+        plans.append(explain_str(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", recording)
+    plans.append(explained(spark, "dedup_lsh_verified"))
+    bodies = [b for plan in plans for b in _lambda_bodies(plan)]
+    assert bodies, "no shingle lambda in any plan — the check is vacuous"
+    assert not [b for b in bodies if "split(" in b], bodies
 
 
 def test_kmeans_assign_broadcasts_centroids(spark):
