@@ -2335,6 +2335,10 @@ QUERIES = {
 # exact-dedup survivors), DEDUP_SUBSTRING_CLEAN's kept-word accounting, and
 # DEDUP_MULTIMODAL_COSINE's stub-feature k-means (k pins to 4 at the sf0.01
 # oracle scale: nd survivors <= 500 -> max(4, n//125) = 4).
+# `edges AS MATERIALIZED` is load-bearing (the kcore lesson): DuckDB inlines
+# CTEs by default, so without it the whole 16-md5-per-shingle LSH chain is
+# re-planned inside `bidir`, the recursive term and every `nd` consumer, and
+# this oracle ran out of memory past 12.5 GiB for a 10-edge answer.
 from flume_spark.queries.llm_ops import lsh_verify_ctes as _lsh_ctes  # noqa: E402
 
 CORPUS_FUNNEL_SQL = f"""
@@ -2365,7 +2369,7 @@ q AS (
 ek AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY md5(text)),
 e AS (SELECT q.* FROM q JOIN ek USING (doc_id)),
 {_lsh_ctes("e")},
-edges AS (
+edges AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b
   FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc_id

@@ -491,9 +491,13 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _curation_survivors(docs).select("doc_id", "n_tokens", "quality")
 
 
+# `edges AS MATERIALIZED` is load-bearing (the kcore lesson): DuckDB inlines
+# CTEs by default, so without it the LSH verification chain is re-planned
+# inside `bidir` and again in the recursive term of `reach`.  The same holds
+# in _training_run_sql and llm_ext.CORPUS_FUNNEL_SQL.
 CURATION_SQL = f"""
 WITH RECURSIVE {_LSH_VERIFY_CTES},
-edges AS (
+edges AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b
   FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc_id
@@ -1197,11 +1201,12 @@ def corpus_training_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# `edges AS MATERIALIZED` is load-bearing: see the note above CURATION_SQL.
 def _training_run_sql() -> str:
     bpe = text.bpe_replace_sql("text", text.EN_MERGES_DEMO)
     return f"""
 WITH RECURSIVE {_LSH_VERIFY_CTES},
-edges AS (
+edges AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b
   FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc_id
