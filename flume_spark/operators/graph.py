@@ -562,11 +562,11 @@ def triangle_count(
     with degree ≥ d, so d² ≤ 2m), which bounds every adjacency array and
     hence the intersect work per edge; under id ordering a hub keeps
     ~deg/2 edges on each side and wedge-style plans explode ~deg²/4 on
-    its key (probe_scale.py --tri).  Triangles are orientation-invariant,
-    so the output is identical either way.  The degree frame is
-    vertex-sized: Catalyst broadcasts it when small and AQE falls back to
-    a shuffle join when not — no hand-scheduling.  Exact integers
-    throughout.
+    its key (BASELINE.md, "Triangle-orientation skew probe").  Triangles
+    are orientation-invariant, so the output is identical either way.  The
+    degree frame is vertex-sized: Catalyst broadcasts it when small and
+    AQE falls back to a shuffle join when not — no hand-scheduling.  Exact
+    integers throughout.
 
     Input convention: each undirected edge present in BOTH directions
     (the co-purchase shape), so per-src out-degree of the directed list

@@ -761,8 +761,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (graph.triangle_count): compact-forward close — edges oriented by
     (degree, id) rank (every out-adjacency bounded O(√m); id-ordering
     lets a hub emit deg²/4 wedge candidates into one task —
-    probe_scale.py --tri), each triangle materialized once as an
-    adjacency-array intersect per edge, never the wedge-candidate rows.
+    BASELINE.md, "Triangle-orientation skew probe"), each triangle
+    materialized once as an adjacency-array intersect per edge, never the
+    wedge-candidate rows.
     Orientation-invariant, so the oracle enumerates triangles with plain
     id-ordering.  Top-100 by (count, vertex) to keep the answer stable
     and bounded."""

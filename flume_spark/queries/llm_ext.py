@@ -728,11 +728,9 @@ GROUP BY 1
 # Incremental-ingest near-dup candidates (new batch vs persisted LSH index)
 # ---------------------------------------------------------------------------
 
-# reuse llm_ops' minhash/band SQL fragments so a tuning change there cannot
-# silently desynchronize this oracle from the batch oracles (same guard the
-# shared _LSH_VERIFY_CTES provide)
-from flume_spark.queries.llm_ops import _BANDS as _INC_BANDS  # noqa: E402
-from flume_spark.queries.llm_ops import _MH as _INC_MH  # noqa: E402
+# reuse llm_ops' LSH chain so a tuning change there cannot silently
+# desynchronize this oracle from the batch oracles
+from flume_spark.queries.llm_ops import lsh_verify_ctes  # noqa: E402
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -754,26 +752,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_INCREMENTAL_SQL = f"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(words)),
-                  i -> words[i] || ' ' || words[i+1])) AS shingle
-    FROM w
-  )
-),
-sig AS (
-  SELECT doc_id,
-         {_INC_MH}
-  FROM sh GROUP BY doc_id
-),
-bands AS (
-{_INC_BANDS}
-)
+WITH {lsh_verify_ctes("documents")}
 SELECT DISTINCT a.doc_id AS doc_new, b.doc_id AS doc_match
 FROM bands a JOIN bands b
   ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
@@ -1806,12 +1785,13 @@ def funnel_report(
 ) -> DataFrame:
     """The curation-funnel composition over an arbitrary (doc_id, source,
     text) corpus — the library form behind the declared `corpus_funnel`
-    query, separated so the `--funnel` scale probe can drive the SAME plan
-    over salted replica corpora.  Pass a dict as `timings` to record each
-    stage's wall-clock seconds: stages are eager localCheckpoints, so the
-    time around each one is that stage's isolated cost — the probe checks
-    the composed wall tracks their sum (stage-additivity; a broken stage
-    boundary re-inlines the upstream chain into every report aggregate).
+    query, separated so a scale probe can drive the SAME plan over salted
+    replica corpora (BASELINE.md, "Corpus-funnel composition probe").
+    Pass a dict as `timings` to record each stage's wall-clock seconds:
+    stages are eager localCheckpoints, so the time around each one is that
+    stage's isolated cost — the probe checked the composed wall tracks
+    their sum (stage-additivity; a broken stage boundary re-inlines the
+    upstream chain into every report aggregate).
     """
     import time as _time
 
@@ -2278,8 +2258,7 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-inline the whole upstream chain per consumer (the re-planning trap
     the plan-hygiene gate caught twice in round 8); at warehouse scale the
     same staging is a checkpoint / intermediate table per stage.  The
-    composition body lives in `funnel_report`, which the `--funnel` scale
-    probe drives over salted replica corpora."""
+    composition body lives in `funnel_report`."""
     docs = T(spark, sf_dir, "documents").select("doc_id", "source", "text")
     return funnel_report(spark, docs)
 
@@ -2329,68 +2308,103 @@ QUERIES = {
     "percentiles_exact": percentiles_exact,
 }
 
-# The funnel oracle replays every stage from the SAME fragments its
-# component oracles use: CURATION_SQL's quality formula, DEDUP_EXACT's
-# min-id-per-md5 rule, the shared lsh_verify_ctes (parameterized on the
-# exact-dedup survivors), DEDUP_SUBSTRING_CLEAN's kept-word accounting, and
-# DEDUP_MULTIMODAL_COSINE's stub-feature k-means (k pins to 4 at the sf0.01
-# oracle scale: nd survivors <= 500 -> max(4, n//125) = 4).
-# `edges AS MATERIALIZED` is load-bearing (the kcore lesson): DuckDB inlines
-# CTEs by default, so without it the whole 16-md5-per-shingle LSH chain is
-# re-planned inside `bidir`, the recursive term and every `nd` consumer, and
-# this oracle ran out of memory past 12.5 GiB for a 10-edge answer.
-from flume_spark.queries.llm_ops import lsh_verify_ctes as _lsh_ctes  # noqa: E402
+# The funnel oracles replay every stage from the SAME fragments their
+# component oracles use: quality_ctes (CURATION_SQL's quality formula),
+# DEDUP_EXACT's min-id-per-md5 rule, lsh_edges_ctes (parameterized on the
+# exact-dedup survivors), components_ctes, DEDUP_SUBSTRING_CLEAN's
+# kept-word accounting, and DEDUP_MULTIMODAL_COSINE's stub-feature k-means
+# (k pins to 4 at the sf0.01 oracle scale: nd survivors <= 500 ->
+# max(4, n//125) = 4).  `e` and `nd` are AS MATERIALIZED for the reason
+# lsh_edges_ctes gives: each has several consumers, and DuckDB re-plans an
+# inlined CTE at every one of them (without them both funnels ran out of
+# memory under a 256 MB limit on the 500-doc sf0.01 corpus).
+from flume_spark.queries.llm_ops import (  # noqa: E402
+    components_ctes,
+    lsh_edges_ctes,
+    quality_ctes,
+)
 
-CORPUS_FUNNEL_SQL = f"""
-WITH RECURSIVE
-nw AS (
+
+def funnel_front_ctes(table: str) -> str:
+    """Stages 1-2 of both funnel oracles over `table` (doc_id, source,
+    text): `nw` (the substring stage's normalized words `cw`), `base`
+    (doc_id, source, text, n_toks) and the quality-gate survivors `q`."""
+    return f"""nw AS (
   SELECT doc_id, source, text,
          string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')
            AS cw
-  FROM documents
+  FROM {table}
 ),
 base AS (SELECT doc_id, source, text, CAST(len(cw) AS BIGINT) AS n_toks FROM nw),
-qt AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-  FROM documents
-),
-qscore AS (
-  SELECT doc_id,
-         least(len(t) / 100.0, 1.0) * 0.5
-           + least(len(list_filter(t,
-               x -> x IN ('the', 'a', 'and', 'of', 'to', 'in'))) * 1.0
-               / len(t) * 5.0, 1.0) * 0.25
-           + len(list_distinct(t)) * 1.0 / len(t) * 0.25 AS quality
-  FROM qt
-),
+{quality_ctes(table)},
 q AS (
   SELECT b.* FROM base b JOIN qscore s USING (doc_id) WHERE s.quality >= 0.5
+)"""
+
+
+def funnel_kmeans_ctes(seeds: str, members: str) -> str:
+    """The semantic stage's stub-feature k-means (one assignment round):
+    `km_f` (id, v) features of `seeds`, `km_init` the 4 md5-drawn
+    centroids among them, `km_pts` the features of `members`, and
+    `km_asg` (id, cluster) each member's nearest centroid.  The batch
+    funnel seeds from its near-dup survivors, the stream funnel from the
+    whole corpus (frozen before ingest)."""
+    return f"""km_f AS (
+  SELECT doc_id AS id,
+         [ (octet_length(CAST(text AS BLOB)) % 256) / 256.0,
+           ascii(substr(text, 1, 1)) / 256.0,
+           ascii(substr(text, length(text), 1)) / 256.0,
+           (octet_length(CAST(text AS BLOB)) * 7 % 256) / 256.0 ] AS v
+  FROM {seeds}
 ),
+km_init AS (
+  SELECT CAST(row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR)), id) - 1
+              AS INT) AS cluster,
+         v AS cv
+  FROM km_f
+  ORDER BY md5(CAST(id AS VARCHAR)), id
+  LIMIT 4
+),
+km_pts AS (SELECT km_f.* FROM km_f JOIN {members} m ON m.doc_id = km_f.id),
+km_sc AS (
+  SELECT p.id, c.cluster,
+         round(list_sum(list_transform(range(1, len(p.v) + 1),
+               i -> (p.v[i] - c.cv[i]) * (p.v[i] - c.cv[i]))), 6) AS dist2
+  FROM km_pts p CROSS JOIN km_init c
+),
+km_asg AS (
+  SELECT id, cluster FROM (
+    SELECT id, cluster,
+           row_number() OVER (PARTITION BY id ORDER BY dist2, cluster) AS rn
+    FROM km_sc
+  ) WHERE rn = 1
+)"""
+
+
+# stages 1-4 of both funnels' per-stage report (input, quality, exact,
+# near_dup); each oracle appends its own substring and semantic rows
+_FUNNEL_REPORT_HEAD = """SELECT 1 AS stage_ord, 'input' AS stage, source,
+       count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_tokens
+FROM base GROUP BY source
+UNION ALL
+SELECT 2, 'quality', source, count(*), CAST(sum(n_toks) AS BIGINT)
+FROM q GROUP BY source
+UNION ALL
+SELECT 3, 'exact', source, count(*), CAST(sum(n_toks) AS BIGINT)
+FROM e GROUP BY source
+UNION ALL
+SELECT 4, 'near_dup', source, count(*), CAST(sum(n_toks) AS BIGINT)
+FROM nd GROUP BY source"""
+
+CORPUS_FUNNEL_SQL = f"""
+WITH RECURSIVE {funnel_front_ctes("documents")},
 ek AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY md5(text)),
-e AS (SELECT q.* FROM q JOIN ek USING (doc_id)),
-{_lsh_ctes("e")},
-edges AS MATERIALIZED (
-  SELECT i.doc_a, i.doc_b
-  FROM inter i
-  JOIN sizes sa ON i.doc_a = sa.doc_id
-  JOIN sizes sb ON i.doc_b = sb.doc_id
-  WHERE round(i.n_inter * 1.0 / (sa.n_sh + sb.n_sh - i.n_inter), 6) >= 0.3
-),
-bidir AS (
-  SELECT doc_a AS src, doc_b AS dst FROM edges
-  UNION SELECT doc_b, doc_a FROM edges
-),
-reach AS (
-  SELECT src, dst FROM bidir
-  UNION
-  SELECT r.src, b.dst FROM reach r JOIN bidir b ON r.dst = b.src
-),
-nddrop AS (
-  SELECT src AS doc_id FROM reach GROUP BY src
-  HAVING least(src, min(dst)) != src
-),
-nd AS (
-  SELECT e.* FROM e WHERE doc_id NOT IN (SELECT doc_id FROM nddrop)
+e AS MATERIALIZED (SELECT q.* FROM q JOIN ek USING (doc_id)),
+{lsh_edges_ctes("e")},
+{components_ctes("lsh_edges")},
+nd AS MATERIALIZED (
+  SELECT e.* FROM e
+  WHERE doc_id NOT IN (SELECT doc_id FROM components WHERE component != doc_id)
 ),
 ndw AS (SELECT nd.doc_id, nw.cw FROM nd JOIN nw USING (doc_id)),
 allw AS (
@@ -2424,36 +2438,8 @@ clean AS (
   SELECT nd.doc_id, CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept
   FROM nd LEFT JOIN keptw k USING (doc_id)
 ),
-f AS (
-  SELECT doc_id AS id,
-         [ (octet_length(CAST(text AS BLOB)) % 256) / 256.0,
-           ascii(substr(text, 1, 1)) / 256.0,
-           ascii(substr(text, length(text), 1)) / 256.0,
-           (octet_length(CAST(text AS BLOB)) * 7 % 256) / 256.0 ] AS v
-  FROM nd
-),
-finit AS (
-  SELECT CAST(row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR)), id) - 1
-              AS INT) AS cluster,
-         v AS cv
-  FROM f
-  ORDER BY md5(CAST(id AS VARCHAR)), id
-  LIMIT 4
-),
-fsc AS (
-  SELECT f.id, finit.cluster,
-         round(list_sum(list_transform(range(1, len(f.v) + 1),
-               i -> (f.v[i] - finit.cv[i]) * (f.v[i] - finit.cv[i]))), 6) AS dist2
-  FROM f CROSS JOIN finit
-),
-fasg AS (
-  SELECT id, cluster FROM (
-    SELECT id, cluster,
-           row_number() OVER (PARTITION BY id ORDER BY dist2, cluster) AS rn
-    FROM fsc
-  ) WHERE rn = 1
-),
-fpts AS (SELECT a.id, a.cluster, f.v FROM fasg a JOIN f ON f.id = a.id),
+{funnel_kmeans_ctes("nd", "nd")},
+fpts AS (SELECT a.id, a.cluster, p.v FROM km_asg a JOIN km_pts p ON p.id = a.id),
 semdrop AS (
   SELECT DISTINCT b.id
   FROM fpts a JOIN fpts b ON a.cluster = b.cluster AND a.id < b.id
@@ -2462,18 +2448,7 @@ semdrop AS (
                  * sqrt(list_dot_product(b.v, b.v))), 6) >= 0.999
 ),
 sem AS (SELECT nd.* FROM nd WHERE doc_id NOT IN (SELECT id FROM semdrop))
-SELECT 1 AS stage_ord, 'input' AS stage, source,
-       count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_tokens
-FROM base GROUP BY source
-UNION ALL
-SELECT 2, 'quality', source, count(*), CAST(sum(n_toks) AS BIGINT)
-FROM q GROUP BY source
-UNION ALL
-SELECT 3, 'exact', source, count(*), CAST(sum(n_toks) AS BIGINT)
-FROM e GROUP BY source
-UNION ALL
-SELECT 4, 'near_dup', source, count(*), CAST(sum(n_toks) AS BIGINT)
-FROM nd GROUP BY source
+{_FUNNEL_REPORT_HEAD}
 UNION ALL
 SELECT 5, 'substring_clean', source, count(*), CAST(sum(c.n_kept) AS BIGINT)
 FROM nd JOIN clean c USING (doc_id) GROUP BY source
@@ -2493,29 +2468,7 @@ FROM sem JOIN clean c USING (doc_id) GROUP BY source
 # scale), matching the frozen-before-ingest seed the query passes to
 # SemanticIngestor.
 STREAM_CORPUS_FUNNEL_SQL = f"""
-WITH nw AS (
-  SELECT doc_id, source, text,
-         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')
-           AS cw
-  FROM documents
-),
-base AS (SELECT doc_id, source, text, CAST(len(cw) AS BIGINT) AS n_toks FROM nw),
-qt AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-  FROM documents
-),
-qscore AS (
-  SELECT doc_id,
-         least(len(t) / 100.0, 1.0) * 0.5
-           + least(len(list_filter(t,
-               x -> x IN ('the', 'a', 'and', 'of', 'to', 'in'))) * 1.0
-               / len(t) * 5.0, 1.0) * 0.25
-           + len(list_distinct(t)) * 1.0 / len(t) * 0.25 AS quality
-  FROM qt
-),
-q AS (
-  SELECT b.* FROM base b JOIN qscore s USING (doc_id) WHERE s.quality >= 0.5
-),
+WITH {funnel_front_ctes("documents")},
 ek AS (
   SELECT doc_id FROM (
     SELECT doc_id,
@@ -2524,22 +2477,17 @@ ek AS (
     FROM q
   ) WHERE rn = 1
 ),
-e AS (SELECT q.* FROM q JOIN ek USING (doc_id)),
-{_lsh_ctes("e")},
-edges AS (
-  SELECT i.doc_a, i.doc_b
-  FROM inter i
-  JOIN sizes sa ON i.doc_a = sa.doc_id
-  JOIN sizes sb ON i.doc_b = sb.doc_id
-  WHERE round(i.n_inter * 1.0 / (sa.n_sh + sb.n_sh - i.n_inter), 6) >= 0.3
-),
+e AS MATERIALIZED (SELECT q.* FROM q JOIN ek USING (doc_id)),
+{lsh_edges_ctes("e")},
 nddrop AS (
   SELECT CASE WHEN doc_a % 3 < doc_b % 3
                 OR (doc_a % 3 = doc_b % 3 AND doc_a < doc_b)
               THEN doc_b ELSE doc_a END AS doc_id
-  FROM edges
+  FROM lsh_edges
 ),
-nd AS (SELECT e.* FROM e WHERE doc_id NOT IN (SELECT doc_id FROM nddrop)),
+nd AS MATERIALIZED (
+  SELECT e.* FROM e WHERE doc_id NOT IN (SELECT doc_id FROM nddrop)
+),
 ndw AS (SELECT nd.doc_id, nw.cw FROM nd JOIN nw USING (doc_id)),
 swins AS (
   SELECT doc_id, md5(array_to_string(cw[i : i + 7], ' ')) AS h
@@ -2561,39 +2509,10 @@ kept AS (
          CAST(nd.n_toks - COALESCE(d.dup_w, 0) AS BIGINT) AS n_kept
   FROM nd LEFT JOIN dupc d USING (doc_id)
 ),
-f AS (
-  SELECT doc_id AS id,
-         [ (octet_length(CAST(text AS BLOB)) % 256) / 256.0,
-           ascii(substr(text, 1, 1)) / 256.0,
-           ascii(substr(text, length(text), 1)) / 256.0,
-           (octet_length(CAST(text AS BLOB)) * 7 % 256) / 256.0 ] AS v
-  FROM base
-),
-finit AS (
-  SELECT CAST(row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR)), id) - 1
-              AS INT) AS cluster,
-         v AS cv
-  FROM f
-  ORDER BY md5(CAST(id AS VARCHAR)), id
-  LIMIT 4
-),
-fnd AS (SELECT f.* FROM f JOIN nd ON nd.doc_id = f.id),
-fsc AS (
-  SELECT fnd.id, finit.cluster,
-         round(list_sum(list_transform(range(1, len(fnd.v) + 1),
-               i -> (fnd.v[i] - finit.cv[i]) * (fnd.v[i] - finit.cv[i]))), 6) AS dist2
-  FROM fnd CROSS JOIN finit
-),
-fasg AS (
-  SELECT id, cluster FROM (
-    SELECT id, cluster,
-           row_number() OVER (PARTITION BY id ORDER BY dist2, cluster) AS rn
-    FROM fsc
-  ) WHERE rn = 1
-),
+{funnel_kmeans_ctes("base", "nd")},
 fpts AS (
-  SELECT a.id, a.cluster, fnd.v, a.id % 3 AS b
-  FROM fasg a JOIN fnd ON fnd.id = a.id
+  SELECT a.id, a.cluster, p.v, a.id % 3 AS b
+  FROM km_asg a JOIN km_pts p ON p.id = a.id
 ),
 semdrop AS (
   SELECT DISTINCT y.id
@@ -2605,18 +2524,7 @@ semdrop AS (
                  * sqrt(list_dot_product(y.v, y.v))), 6) >= 0.999
 ),
 sem AS (SELECT nd.* FROM nd WHERE doc_id NOT IN (SELECT id FROM semdrop))
-SELECT 1 AS stage_ord, 'input' AS stage, source,
-       count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_tokens
-FROM base GROUP BY source
-UNION ALL
-SELECT 2, 'quality', source, count(*), CAST(sum(n_toks) AS BIGINT)
-FROM q GROUP BY source
-UNION ALL
-SELECT 3, 'exact', source, count(*), CAST(sum(n_toks) AS BIGINT)
-FROM e GROUP BY source
-UNION ALL
-SELECT 4, 'near_dup', source, count(*), CAST(sum(n_toks) AS BIGINT)
-FROM nd GROUP BY source
+{_FUNNEL_REPORT_HEAD}
 UNION ALL
 SELECT 5, 'substring', source, count(*), CAST(sum(k.n_kept) AS BIGINT)
 FROM nd JOIN kept k USING (doc_id) GROUP BY source

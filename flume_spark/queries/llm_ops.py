@@ -34,19 +34,28 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.1)
 
 
-DEDUP_NGRAM_SQL = """
-WITH w AS (
+def word_shingle_ctes(table: str, n: int) -> str:
+    """THE word-shingle oracle fragment (`dedup.word_shingles`, distinct)
+    over `table` (doc_id, text): `w` (doc_id, words) the lower-cased
+    whitespace tokens, `sh` (doc_id, shingle) each doc's distinct n-word
+    shingles."""
+    joined = " || ' ' || ".join(["words[i]"] + [f"words[i+{j}]" for j in range(1, n)])
+    return f"""w AS (
   SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM documents
+  FROM {table}
 ),
 sh AS (
   SELECT DISTINCT doc_id, shingle FROM (
     SELECT doc_id,
-           unnest(list_transform(range(1, len(words) - 1),
-                  i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS shingle
+           unnest(list_transform(range(1, len(words) - {n - 2}),
+                  i -> {joined})) AS shingle
     FROM w
   )
-),
+)"""
+
+
+DEDUP_NGRAM_SQL = f"""
+WITH {word_shingle_ctes("documents", 3)},
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
@@ -75,29 +84,18 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_NGRAM_CAPPED_SQL = """
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM documents
-),
-sh0 AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(words) - 1),
-                  i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS shingle
-    FROM w
-  )
-),
-freq AS (SELECT shingle, count(*) AS df FROM sh0 GROUP BY 1),
-sh AS (
-  SELECT sh0.doc_id, sh0.shingle
-  FROM sh0 JOIN freq ON sh0.shingle = freq.shingle
+DEDUP_NGRAM_CAPPED_SQL = f"""
+WITH {word_shingle_ctes("documents", 3)},
+freq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
+shc AS (
+  SELECT sh.doc_id, sh.shingle
+  FROM sh JOIN freq ON sh.shingle = freq.shingle
   WHERE freq.df <= 5
 ),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )
 SELECT doc_a, doc_b,
@@ -121,29 +119,18 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_CONTAINMENT_SQL = """
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM documents
-),
-sh0 AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(words) - 1),
-                  i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS shingle
-    FROM w
-  )
-),
-freq AS (SELECT shingle, count(*) AS df FROM sh0 GROUP BY 1),
-sh AS (
-  SELECT sh0.doc_id, sh0.shingle
-  FROM sh0 JOIN freq ON sh0.shingle = freq.shingle
+DEDUP_CONTAINMENT_SQL = f"""
+WITH {word_shingle_ctes("documents", 3)},
+freq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
+shc AS (
+  SELECT sh.doc_id, sh.shingle
+  FROM sh JOIN freq ON sh.shingle = freq.shingle
   WHERE freq.df <= 5
 ),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )
 SELECT doc_a, doc_b,
@@ -187,19 +174,19 @@ _BANDS = "\n  UNION ALL\n".join(
     for b in range(4)
 )
 
-DEDUP_MINHASH_SQL = f"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(words)),
-                  i -> words[i] || ' ' || words[i+1])) AS shingle
-    FROM w
-  )
-),
+# Shared CTE chain for the LSH oracles: 2-word shingle index, minhash
+# signatures, bands, candidate pairs, sizes, intersections.  Used by
+# DEDUP_MINHASH_SQL, DEDUP_LSH_VERIFIED_SQL and, through lsh_edges_ctes,
+# the curation, training-run and (over a stage-survivor CTE) funnel
+# oracles, so tuning changes (shingle_n, bands, threshold) cannot silently
+# desynchronize them.
+
+
+def lsh_verify_ctes(table: str) -> str:
+    """The fragment parameterized on its input relation: `table` is any
+    earlier CTE with (doc_id, text) — the funnels run it over their
+    exact-dedup survivors instead of the raw documents table."""
+    return f"""{word_shingle_ctes(table, 2)},
 sig AS (
   SELECT doc_id,
          {_MH}
@@ -207,10 +194,26 @@ sig AS (
 ),
 bands AS (
 {_BANDS}
-)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bands a JOIN bands b
-  ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
+   AND a.doc_id < b.doc_id
+),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+inter AS (
+  SELECT c.doc_a, c.doc_b, count(*) AS n_inter
+  FROM cand c
+  JOIN sh x ON x.doc_id = c.doc_a
+  JOIN sh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
+  GROUP BY 1, 2
+)"""
+
+
+DEDUP_MINHASH_SQL = f"""
+WITH {lsh_verify_ctes("documents")}
+SELECT doc_a, doc_b FROM cand
 """
 
 
@@ -237,67 +240,10 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared CTE chain for the LSH->exact-verify oracles: 2-word shingle index,
-# minhash signatures, bands, candidate pairs, sizes, intersections.  Used by
-# DEDUP_LSH_VERIFIED_SQL, CURATION_SQL and (over a stage-survivor CTE) the
-# corpus-funnel oracle, so tuning changes (shingle_n, bands, threshold)
-# cannot silently desynchronize the oracles.
-
-
-def lsh_verify_ctes(table: str = "documents") -> str:
-    """The fragment parameterized on its input relation: `table` is any
-    earlier CTE with (doc_id, text) — the funnel runs it over the
-    exact-dedup survivors instead of the raw documents table.  The source
-    relation is an explicit `__SRC__` placeholder in the template and
-    EVERY occurrence is substituted, so adding a second read of the source
-    to the chain cannot silently desynchronize the funnel oracle from the
-    component oracles (it used to be a positional first-occurrence
-    string replace of 'FROM documents')."""
-    return _LSH_VERIFY_CTES_TEMPLATE.replace("__SRC__", table)
-
-
-_LSH_VERIFY_CTES_TEMPLATE = f"""w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM __SRC__
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(words)),
-                  i -> words[i] || ' ' || words[i+1])) AS shingle
-    FROM w
-  )
-),
-sig AS (
-  SELECT doc_id,
-         {_MH}
-  FROM sh GROUP BY doc_id
-),
-bands AS (
-{_BANDS}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-  FROM cand c
-  JOIN sh x ON x.doc_id = c.doc_a
-  JOIN sh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
-  GROUP BY 1, 2
-)"""
-
-# the documents-sourced instantiation, for the oracles that read the raw table
-_LSH_VERIFY_CTES = lsh_verify_ctes("documents")
-
 # Oracle: the same banded candidate set, then exact Jaccard over the same
 # 2-word shingles, restricted to candidates (verification semantics).
 DEDUP_LSH_VERIFIED_SQL = f"""
-WITH {_LSH_VERIFY_CTES}
+WITH {lsh_verify_ctes("documents")}
 SELECT i.doc_a, i.doc_b,
        round(i.n_inter * 1.0 / (sa.n_sh + sb.n_sh - i.n_inter), 6) AS jaccard
 FROM inter i
@@ -322,8 +268,8 @@ _SIMHASH_FP = " + ".join(
     f"(CASE WHEN s{i} > 0 THEN {1 << i}::BIGINT ELSE 0 END)" for i in range(32)
 )
 
-DEDUP_SIMHASH_SQL = f"""
-WITH toks AS (
+# toks -> per-token md5 -> 32 signed bit sums -> `fp` (doc_id, simhash)
+_SIMHASH_CTES = f"""toks AS (
   SELECT doc_id, tok, count(*) AS cnt FROM (
     SELECT doc_id,
            unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
@@ -338,7 +284,10 @@ bits AS (
          {_SIMHASH_BITS}
   FROM h GROUP BY doc_id
 ),
-fp AS (SELECT doc_id, {_SIMHASH_FP} AS simhash FROM bits)
+fp AS (SELECT doc_id, {_SIMHASH_FP} AS simhash FROM bits)"""
+
+DEDUP_SIMHASH_SQL = f"""
+WITH {_SIMHASH_CTES}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        bit_count(xor(a.simhash, b.simhash))::INT AS hamming
 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
@@ -354,34 +303,38 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.connected_components(pairs, "doc_a", "doc_b")
 
 
-# Oracle: transitive closure by recursive CTE over the same SimHash pairs,
-# then component = min reachable node (including self).
-DEDUP_COMPONENTS_SQL = (
-    DEDUP_SIMHASH_SQL.replace(
-        "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,\n"
-        "       bit_count(xor(a.simhash, b.simhash))::INT AS hamming\n"
-        "FROM fp a JOIN fp b ON a.doc_id < b.doc_id\n"
-        "WHERE bit_count(xor(a.simhash, b.simhash)) <= 3",
-        """,
-edges AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-),
-bidir AS (
-  SELECT doc_a AS src, doc_b AS dst FROM edges
-  UNION SELECT doc_b, doc_a FROM edges
+def components_ctes(edges: str) -> str:
+    """THE connected-components oracle fragment over an undirected edge
+    relation `edges` (doc_a, doc_b): transitive closure by recursive CTE
+    (`reach` holds every reachable pair), then `components` (doc_id,
+    component) with component = smallest reachable id, including self —
+    what `dedup.connected_components` computes.  Only nodes with an edge
+    appear.  The enclosing query must say WITH RECURSIVE."""
+    return f"""bidir AS (
+  SELECT doc_a AS src, doc_b AS dst FROM {edges}
+  UNION SELECT doc_b, doc_a FROM {edges}
 ),
 reach AS (
   SELECT src, dst FROM bidir
   UNION
   SELECT r.src, b.dst FROM reach r JOIN bidir b ON r.dst = b.src
-)
-SELECT src AS doc_id, least(src, min(dst)) AS component
-FROM reach GROUP BY src
-""",
-    ).replace("WITH toks AS", "WITH RECURSIVE toks AS")
-)
+),
+components AS (
+  SELECT src AS doc_id, least(src, min(dst)) AS component
+  FROM reach GROUP BY src
+)"""
+
+
+DEDUP_COMPONENTS_SQL = f"""
+WITH RECURSIVE {_SIMHASH_CTES},
+edges AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+),
+{components_ctes("edges")}
+SELECT doc_id, component FROM components
+"""
 
 
 def corpus_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,38 +444,36 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _curation_survivors(docs).select("doc_id", "n_tokens", "quality")
 
 
-# `edges AS MATERIALIZED` is load-bearing (the kcore lesson): DuckDB inlines
-# CTEs by default, so without it the LSH verification chain is re-planned
-# inside `bidir` and again in the recursive term of `reach`.  The same holds
-# in _training_run_sql and llm_ext.CORPUS_FUNNEL_SQL.
-CURATION_SQL = f"""
-WITH RECURSIVE {_LSH_VERIFY_CTES},
-edges AS MATERIALIZED (
+def lsh_edges_ctes(table: str) -> str:
+    """`lsh_verify_ctes(table)` plus `lsh_edges` (doc_a, doc_b): the
+    candidate pairs whose exact 2-shingle Jaccard is >= 0.3 — the
+    near-dup edge set of the curate law (`_curation_survivors`).
+
+    `AS MATERIALIZED` is load-bearing (the kcore lesson): DuckDB inlines
+    a CTE at every reference, so without it the whole 16-md5-per-shingle
+    LSH chain is re-planned inside each consumer — twice in
+    `components_ctes` and again in its recursive term (the corpus-funnel
+    oracle ran out of memory past 12.5 GiB for a 10-edge answer)."""
+    return f"""{lsh_verify_ctes(table)},
+lsh_edges AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b
   FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc_id
   JOIN sizes sb ON i.doc_b = sb.doc_id
   WHERE round(i.n_inter * 1.0 / (sa.n_sh + sb.n_sh - i.n_inter), 6) >= 0.3
+)"""
+
+
+def quality_ctes(table: str) -> str:
+    """THE heuristic quality score (`text.quality_score`) over `table`
+    (doc_id, text): `qscore` (doc_id, n_tokens, quality) — length,
+    stopword and type-token terms over the lower-cased whitespace
+    tokens."""
+    return f"""qt AS (
+  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+  FROM {table}
 ),
-bidir AS (
-  SELECT doc_a AS src, doc_b AS dst FROM edges
-  UNION SELECT doc_b, doc_a FROM edges
-),
-reach AS (
-  SELECT src, dst FROM bidir
-  UNION
-  SELECT r.src, b.dst FROM reach r JOIN bidir b ON r.dst = b.src
-),
-dropped AS (
-  SELECT src AS doc_id FROM reach GROUP BY src
-  HAVING least(src, min(dst)) != src
-),
-toks2 AS (
-  SELECT doc_id, text,
-         regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-  FROM documents
-),
-scored AS (
+qscore AS (
   SELECT doc_id,
          len(t) AS n_tokens,
          least(len(t) / 100.0, 1.0) * 0.5
@@ -530,11 +481,18 @@ scored AS (
                x -> x IN ('the', 'a', 'and', 'of', 'to', 'in'))) * 1.0
                / len(t) * 5.0, 1.0) * 0.25
            + len(list_distinct(t)) * 1.0 / len(t) * 0.25 AS quality
-  FROM toks2
-)
+  FROM qt
+)"""
+
+
+CURATION_SQL = f"""
+WITH RECURSIVE {lsh_edges_ctes("documents")},
+{components_ctes("lsh_edges")},
+{quality_ctes("documents")}
 SELECT doc_id, n_tokens, quality
-FROM scored
-WHERE quality >= 0.5 AND doc_id NOT IN (SELECT doc_id FROM dropped)
+FROM qscore
+WHERE quality >= 0.5
+  AND doc_id NOT IN (SELECT doc_id FROM components WHERE component != doc_id)
 """
 
 
@@ -828,26 +786,13 @@ def source_cap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.source_cap(docs, "doc_id", "text", "source", k=20)
 
 
-SOURCE_CAP_SQL = """
-WITH t AS (
-  SELECT doc_id, source,
-         regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-  FROM documents
-),
-scored AS (
-  SELECT doc_id, source,
-         least(len(toks) / 100.0, 1.0) * 0.5
-           + least(len(list_filter(toks,
-               x -> x IN ('the', 'a', 'and', 'of', 'to', 'in'))) * 1.0
-               / len(toks) * 5.0, 1.0) * 0.25
-           + len(list_distinct(toks)) * 1.0 / len(toks) * 0.25 AS quality
-  FROM t
-)
+SOURCE_CAP_SQL = f"""
+WITH {quality_ctes("documents")}
 SELECT doc_id, source, quality, "rank" FROM (
   SELECT doc_id, source, quality,
          row_number() OVER (PARTITION BY source
                             ORDER BY quality DESC, doc_id) AS "rank"
-  FROM scored
+  FROM qscore JOIN documents USING (doc_id)
 ) WHERE "rank" <= 20
 """
 
@@ -1050,46 +995,55 @@ def corpus_mixture_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mixture_pack_sql() -> str:
-    bpe = text.bpe_replace_sql("text", text.EN_MERGES_DEMO)
-    return f"""
-WITH g AS (
+def mixture_select_ctes(table: str) -> str:
+    """THE SQL twin of `_mixture_select` over `table` (doc_id, lang,
+    text): ppm-quantized alpha=0.3 per-language quotas of a 200-doc draw
+    (`mix_quota`), then the per-language Efraimidis-Spirakis keyed draw;
+    `mix_sel` (doc_id, lang) is the selection."""
+    return f"""mix_g AS (
   SELECT lang,
          CAST(sum(len(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT)
            AS n_tokens
-  FROM documents GROUP BY lang
+  FROM {table} GROUP BY lang
 ),
-tot AS (SELECT sum(pow(CAST(n_tokens AS DOUBLE), 0.3)) AS ta FROM g),
-q AS (
+mix_tot AS (SELECT sum(pow(CAST(n_tokens AS DOUBLE), 0.3)) AS ta FROM mix_g),
+mix_quota AS (
   SELECT lang,
          (200 * CAST(floor(round(pow(CAST(n_tokens AS DOUBLE), 0.3) / ta, 6)
                            * 1000000 + 0.5) AS BIGINT)) // 1000000 AS quota
-  FROM g CROSS JOIN tot
+  FROM mix_g CROSS JOIN mix_tot
 ),
-t AS (
+mix_t AS (
   SELECT doc_id, lang,
          len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens
-  FROM documents
+  FROM {table}
 ),
-keyed AS (
+mix_keyed AS (
   SELECT doc_id, lang,
          -ln( (('0x' || substr(md5('flume:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
                + 1.0) / 281474976710656.0 )
            / CAST(n_tokens AS DOUBLE) AS k
-  FROM t WHERE n_tokens > 0
+  FROM mix_t WHERE n_tokens > 0
 ),
-ranked AS (
+mix_ranked AS (
   SELECT doc_id, lang,
          row_number() OVER (PARTITION BY lang ORDER BY k, doc_id) AS rn
-  FROM keyed
+  FROM mix_keyed
 ),
-sel AS (
-  SELECT doc_id, lang FROM ranked JOIN q USING (lang) WHERE rn <= quota
-),
+mix_sel AS (
+  SELECT doc_id, lang FROM mix_ranked JOIN mix_quota USING (lang)
+  WHERE rn <= quota
+)"""
+
+
+def _mixture_pack_sql() -> str:
+    bpe = text.bpe_replace_sql("text", text.EN_MERGES_DEMO)
+    return f"""
+WITH {mixture_select_ctes("documents")},
 staged AS (
   SELECT d.doc_id, CAST(d.doc_id % 8 AS INT) AS shard, sel.lang,
          CAST({bpe} AS BIGINT) AS n_tokens
-  FROM documents d JOIN sel ON sel.doc_id = d.doc_id
+  FROM documents d JOIN mix_sel sel ON sel.doc_id = d.doc_id
 ),
 cum AS (
   SELECT doc_id, shard, lang, n_tokens,
@@ -1201,88 +1155,24 @@ def corpus_training_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# `edges AS MATERIALIZED` is load-bearing: see the note above CURATION_SQL.
 def _training_run_sql() -> str:
     bpe = text.bpe_replace_sql("text", text.EN_MERGES_DEMO)
     return f"""
-WITH RECURSIVE {_LSH_VERIFY_CTES},
-edges AS MATERIALIZED (
-  SELECT i.doc_a, i.doc_b
-  FROM inter i
-  JOIN sizes sa ON i.doc_a = sa.doc_id
-  JOIN sizes sb ON i.doc_b = sb.doc_id
-  WHERE round(i.n_inter * 1.0 / (sa.n_sh + sb.n_sh - i.n_inter), 6) >= 0.3
-),
-bidir AS (
-  SELECT doc_a AS src, doc_b AS dst FROM edges
-  UNION SELECT doc_b, doc_a FROM edges
-),
-reach AS (
-  SELECT src, dst FROM bidir
-  UNION
-  SELECT r.src, b.dst FROM reach r JOIN bidir b ON r.dst = b.src
-),
-dropped AS (
-  SELECT src AS doc_id FROM reach GROUP BY src
-  HAVING least(src, min(dst)) != src
-),
-toks2 AS (
-  SELECT doc_id,
-         regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-  FROM documents
-),
-qual AS (
-  SELECT doc_id,
-         least(len(t) / 100.0, 1.0) * 0.5
-           + least(len(list_filter(t,
-               x -> x IN ('the', 'a', 'and', 'of', 'to', 'in'))) * 1.0
-               / len(t) * 5.0, 1.0) * 0.25
-           + len(list_distinct(t)) * 1.0 / len(t) * 0.25 AS quality
-  FROM toks2
-),
+WITH RECURSIVE {lsh_edges_ctes("documents")},
+{components_ctes("lsh_edges")},
+{quality_ctes("documents")},
 cur AS (
   SELECT d.doc_id, d.lang, d.text
-  FROM documents d JOIN qual ON qual.doc_id = d.doc_id
-  WHERE qual.quality >= 0.5
-    AND d.doc_id NOT IN (SELECT doc_id FROM dropped)
+  FROM documents d JOIN qscore ON qscore.doc_id = d.doc_id
+  WHERE qscore.quality >= 0.5
+    AND d.doc_id NOT IN (
+      SELECT doc_id FROM components WHERE component != doc_id)
 ),
-g AS (
-  SELECT lang,
-         CAST(sum(len(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT)
-           AS n_tokens
-  FROM cur GROUP BY lang
-),
-tot AS (SELECT sum(pow(CAST(n_tokens AS DOUBLE), 0.3)) AS ta FROM g),
-q AS (
-  SELECT lang,
-         (200 * CAST(floor(round(pow(CAST(n_tokens AS DOUBLE), 0.3) / ta, 6)
-                           * 1000000 + 0.5) AS BIGINT)) // 1000000 AS quota
-  FROM g CROSS JOIN tot
-),
-t AS (
-  SELECT doc_id, lang,
-         len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens
-  FROM cur
-),
-keyed AS (
-  SELECT doc_id, lang,
-         -ln( (('0x' || substr(md5('flume:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
-               + 1.0) / 281474976710656.0 )
-           / CAST(n_tokens AS DOUBLE) AS k
-  FROM t WHERE n_tokens > 0
-),
-ranked AS (
-  SELECT doc_id, lang,
-         row_number() OVER (PARTITION BY lang ORDER BY k, doc_id) AS rn
-  FROM keyed
-),
-sel AS (
-  SELECT doc_id, lang FROM ranked JOIN q USING (lang) WHERE rn <= quota
-),
+{mixture_select_ctes("cur")},
 staged AS (
   SELECT d.doc_id, CAST(d.doc_id % 8 AS INT) AS shard,
          CAST({bpe} AS BIGINT) AS n_bpe
-  FROM cur d JOIN sel ON sel.doc_id = d.doc_id
+  FROM cur d JOIN mix_sel sel ON sel.doc_id = d.doc_id
 ),
 cum AS (
   SELECT doc_id, shard, n_bpe,
@@ -1303,7 +1193,7 @@ man AS (
          CAST(sum(len(regexp_split_to_array(lower(trim(c.text)), '\\s+'))) AS BIGINT)
            AS n_tokens,
          CAST(sum(length(c.text)) AS BIGINT) AS n_chars
-  FROM cur c JOIN sel ON sel.doc_id = c.doc_id
+  FROM cur c JOIN mix_sel sel ON sel.doc_id = c.doc_id
   GROUP BY 1
 )
 SELECT man.shard, man.n_docs, man.n_tokens, man.n_chars,
@@ -1370,19 +1260,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_DECONTAMINATE_SQL = """
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(words) - 1),
-                  i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS shingle
-    FROM w
-  )
-)
+TEXT_DECONTAMINATE_SQL = f"""
+WITH {word_shingle_ctes("documents", 3)}
 SELECT c.doc_id, p.doc_id AS probe_id, count(*) AS n_shared
 FROM sh c JOIN sh p ON c.shingle = p.shingle
 WHERE c.doc_id % 97 != 0 AND p.doc_id % 97 = 0
@@ -1674,7 +1553,8 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-threshold complement to dedup_lsh_verified.  The oracle is the
     plain all-pairs inverted-index join: hash-equality IS the lossless
     proof (prefix + positional pruning drops ~84% of the inverted-index
-    join cost — probe_scale.py --prefix — yet no result row)."""
+    join cost — BASELINE.md, "Prefix-filter join optimization" — yet no
+    result row)."""
     docs = T(spark, sf_dir, "documents")
     return dedup.prefix_filter_pairs(docs, "doc_id", "text", n=2, t_num=4, t_den=5)
 
@@ -1682,19 +1562,8 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Oracle: brute-force all-pairs Jaccard — deliberately WITHOUT prefix
 # filtering, so the hash gate checks the lossless claim, not just the
 # arithmetic.  Integer threshold predicate: J >= 4/5 <=> 9*i >= 4*(na+nb).
-DEDUP_PREFIX_FILTER_SQL = """
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(words)),
-                  i -> words[i] || ' ' || words[i+1])) AS shingle
-    FROM w
-  )
-),
+DEDUP_PREFIX_FILTER_SQL = f"""
+WITH {word_shingle_ctes("documents", 2)},
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
@@ -1729,19 +1598,8 @@ def dedup_prefix_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_PREFIX_INCR_SQL = """
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(words)),
-                  i -> words[i] || ' ' || words[i+1])) AS shingle
-    FROM w
-  )
-),
+DEDUP_PREFIX_INCR_SQL = f"""
+WITH {word_shingle_ctes("documents", 2)},
 ranked AS (
   SELECT doc_id, shingle,
          row_number() OVER (PARTITION BY doc_id
@@ -2138,30 +1996,37 @@ def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ASCII assumption; a blob-consistent rewrite would need octet-level
 # extraction over CAST(text AS BLOB), which DuckDB exposes only through
 # char-indexed substr on the cast.
-MULTIMODAL_PHASH_SQL = """
-WITH n_ AS (SELECT doc_id, length(text) AS n FROM documents),
-samp AS (
+def phash_ctes(table: str) -> str:
+    """THE pHash oracle fragment over `table` (doc_id, text): 32
+    evenly-spaced payload samples, bit i set iff 32*s_i > sum(samples);
+    `ph_fp` (doc_id, phash) covers every doc (empty payloads hash to 0)."""
+    return f"""ph_n AS (SELECT doc_id, length(text) AS n FROM {table}),
+ph_samp AS (
   SELECT d.doc_id, t.i,
-         ascii(substr(d.text, CAST((t.i * n_.n) // 32 AS INT) + 1, 1)) AS s
-  FROM documents d JOIN n_ USING (doc_id), unnest(range(0, 32)) AS t(i)
-  WHERE n_.n > 0
+         ascii(substr(d.text, CAST((t.i * ph_n.n) // 32 AS INT) + 1, 1)) AS s
+  FROM {table} d JOIN ph_n USING (doc_id), unnest(range(0, 32)) AS t(i)
+  WHERE ph_n.n > 0
 ),
-tot AS (SELECT doc_id, sum(s) AS tot FROM samp GROUP BY 1),
-fp AS (
-  SELECT samp.doc_id,
+ph_tot AS (SELECT doc_id, sum(s) AS tot FROM ph_samp GROUP BY 1),
+ph_fp0 AS (
+  SELECT ph_samp.doc_id,
          sum(CASE WHEN 32 * s > tot THEN CAST(1 AS BIGINT) << i
                   ELSE 0 END) AS phash
-  FROM samp JOIN tot USING (doc_id) GROUP BY 1
+  FROM ph_samp JOIN ph_tot USING (doc_id) GROUP BY 1
 ),
-fp2 AS (
-  SELECT doc_id, phash FROM fp
+ph_fp AS (
+  SELECT doc_id, phash FROM ph_fp0
   UNION ALL
-  SELECT doc_id, CAST(0 AS BIGINT) FROM n_ WHERE n = 0
-),
+  SELECT doc_id, CAST(0 AS BIGINT) FROM ph_n WHERE n = 0
+)"""
+
+
+MULTIMODAL_PHASH_SQL = f"""
+WITH {phash_ctes("documents")},
 banded AS (
   SELECT doc_id, phash, t.j AS block_idx,
          (phash >> CAST(t.j * 8 AS INT)) & 255 AS block_val
-  FROM fp2, unnest(range(0, 4)) AS t(j)
+  FROM ph_fp, unnest(range(0, 4)) AS t(j)
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.phash, b.phash)) AS INT) AS hamming
@@ -2187,31 +2052,42 @@ def multimodal_frame_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.frame_phash(payloads, n_frames=4, bits=32)
 
 
-MULTIMODAL_FRAME_PHASH_SQL = """
-WITH fr AS (
+def frame_phash_ctes(table: str) -> str:
+    """THE per-frame pHash oracle fragment (`multimodal.frame_phash`) over
+    `table` (doc_id, text): 4 equal keyframe windows `fr`, each hashed
+    with the pHash mean-compare rule; `fall` (doc_id, frame_idx, fhash)
+    has every frame, empty ones hashing to 0."""
+    return f"""fr AS (
   SELECT doc_id, CAST(t.i AS INT) AS frame_idx,
          substr(text,
                 CAST(t.i * (octet_length(CAST(text AS BLOB)) // 4) AS INT) + 1,
                 CAST(octet_length(CAST(text AS BLOB)) // 4 AS INT)) AS ftext
-  FROM documents, unnest(range(0, 4)) AS t(i)
+  FROM {table}, unnest(range(0, 4)) AS t(i)
 ),
-n_ AS (SELECT doc_id, frame_idx, length(ftext) AS n FROM fr),
-samp AS (
+fn AS (SELECT doc_id, frame_idx, length(ftext) AS n FROM fr),
+fsamp AS (
   SELECT fr.doc_id, fr.frame_idx, t.i,
-         ascii(substr(fr.ftext, CAST((t.i * n_.n) // 32 AS INT) + 1, 1)) AS s
-  FROM fr JOIN n_ USING (doc_id, frame_idx), unnest(range(0, 32)) AS t(i)
-  WHERE n_.n > 0
+         ascii(substr(fr.ftext, CAST((t.i * fn.n) // 32 AS INT) + 1, 1)) AS s
+  FROM fr JOIN fn USING (doc_id, frame_idx), unnest(range(0, 32)) AS t(i)
+  WHERE fn.n > 0
 ),
-tot AS (SELECT doc_id, frame_idx, sum(s) AS tot FROM samp GROUP BY 1, 2),
-fp AS (
-  SELECT samp.doc_id, samp.frame_idx,
+ftot AS (SELECT doc_id, frame_idx, sum(s) AS tot FROM fsamp GROUP BY 1, 2),
+ffp AS (
+  SELECT fsamp.doc_id, fsamp.frame_idx,
          sum(CASE WHEN 32 * s > tot THEN CAST(1 AS BIGINT) << i
                   ELSE 0 END) AS fhash
-  FROM samp JOIN tot USING (doc_id, frame_idx) GROUP BY 1, 2
-)
-SELECT n_.doc_id AS id, n_.frame_idx,
-       CAST(coalesce(fp.fhash, 0) AS BIGINT) AS fhash
-FROM n_ LEFT JOIN fp USING (doc_id, frame_idx)
+  FROM fsamp JOIN ftot USING (doc_id, frame_idx) GROUP BY 1, 2
+),
+fall AS (
+  SELECT fn.doc_id, fn.frame_idx,
+         CAST(coalesce(ffp.fhash, 0) AS BIGINT) AS fhash
+  FROM fn LEFT JOIN ffp USING (doc_id, frame_idx)
+)"""
+
+
+MULTIMODAL_FRAME_PHASH_SQL = f"""
+WITH {frame_phash_ctes("documents")}
+SELECT doc_id AS id, frame_idx, fhash FROM fall
 """
 
 
@@ -2274,40 +2150,49 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.audio_fingerprint_stub(payloads, n_windows=32)
 
 
-MULTIMODAL_AUDIO_FP_SQL = """
-WITH p AS (
+def audio_fp_ctes(table: str) -> str:
+    """THE audio-fingerprint oracle fragment over `table` (doc_id, text):
+    the payload as little-endian 16-bit PCM in 32 equal windows of `wl`
+    samples, exact-integer window energies, bit i set iff 32*E_i >
+    sum(E).  `au_p` (doc_id, text, wl) lists every doc; `au_fp` (doc_id,
+    ahash) only those with a non-empty window."""
+    return f"""au_p AS (
   SELECT doc_id, text,
          (octet_length(CAST(text AS BLOB)) // 2) // 32 AS wl
-  FROM documents
+  FROM {table}
 ),
-w AS (
+au_w AS (
   SELECT doc_id, CAST(t.i AS INT) AS wi, wl, text
-  FROM p, unnest(range(0, 32)) AS t(i)
+  FROM au_p, unnest(range(0, 32)) AS t(i)
   WHERE wl > 0
 ),
-s AS (
+au_s AS (
   SELECT doc_id, wi,
          ascii(substr(text, CAST(2 * (wi * wl + t.j) + 1 AS INT), 1))
          + 256 * ascii(substr(text, CAST(2 * (wi * wl + t.j) + 2 AS INT), 1))
          AS v
-  FROM w, unnest(range(0, wl)) AS t(j)
+  FROM au_w, unnest(range(0, wl)) AS t(j)
 ),
-e AS (
+au_e AS (
   SELECT doc_id, wi,
          sum(CASE WHEN v >= 32768
                   THEN CAST(v - 65536 AS BIGINT) * (v - 65536)
                   ELSE CAST(v AS BIGINT) * v END) AS energy
-  FROM s GROUP BY 1, 2
+  FROM au_s GROUP BY 1, 2
 ),
-tot AS (SELECT doc_id, sum(energy) AS tot FROM e GROUP BY 1),
-fp AS (
-  SELECT e.doc_id,
+au_tot AS (SELECT doc_id, sum(energy) AS tot FROM au_e GROUP BY 1),
+au_fp AS (
+  SELECT au_e.doc_id,
          sum(CASE WHEN 32 * energy > tot THEN CAST(1 AS BIGINT) << wi
                   ELSE 0 END) AS ahash
-  FROM e JOIN tot USING (doc_id) GROUP BY 1
-)
+  FROM au_e JOIN au_tot USING (doc_id) GROUP BY 1
+)"""
+
+
+MULTIMODAL_AUDIO_FP_SQL = f"""
+WITH {audio_fp_ctes("documents")}
 SELECT p.doc_id AS id, CAST(coalesce(fp.ahash, 0) AS BIGINT) AS ahash
-FROM p LEFT JOIN fp USING (doc_id)
+FROM au_p p LEFT JOIN au_fp fp USING (doc_id)
 """
 
 
@@ -2848,6 +2733,30 @@ def _media_gate_chain(nd, docs):
     )
 
 
+def _media_funnel_report(pay, sized, nd, loud, varied, aligned) -> DataFrame:
+    """Both media funnels' per-stage (stage_ord, stage, n_docs, n_bytes)."""
+
+    def stage(df, ordinal, name):
+        return df.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.coalesce(F.sum("n_bytes"), F.lit(0)).cast("long").alias("n_bytes"),
+        ).select(
+            F.lit(ordinal).alias("stage_ord"),
+            F.lit(name).alias("stage"),
+            "n_docs",
+            "n_bytes",
+        )
+
+    return (
+        stage(pay, 1, "input")
+        .unionByName(stage(sized, 2, "size_gate"))
+        .unionByName(stage(nd, 3, "phash_dedup"))
+        .unionByName(stage(loud, 4, "silence_gate"))
+        .unionByName(stage(varied, 5, "frame_diversity"))
+        .unionByName(stage(aligned, 6, "align_gate"))
+    )
+
+
 def media_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end MEDIA curation funnel — the media twin of
     `corpus_funnel`, composed from the modality operators this round
@@ -2874,64 +2783,23 @@ def media_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     loud, varied, aligned = _media_gate_chain(nd, docs)
 
-    def stage(df, ordinal, name):
-        return df.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("n_bytes"), F.lit(0)).cast("long").alias("n_bytes"),
-        ).select(
-            F.lit(ordinal).alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            "n_docs",
-            "n_bytes",
-        )
-
-    return (
-        stage(pay, 1, "input")
-        .unionByName(stage(sized, 2, "size_gate"))
-        .unionByName(stage(nd, 3, "phash_dedup"))
-        .unionByName(stage(loud, 4, "silence_gate"))
-        .unionByName(stage(varied, 5, "frame_diversity"))
-        .unionByName(stage(aligned, 6, "align_gate"))
-    )
+    return _media_funnel_report(pay, sized, nd, loud, varied, aligned)
 
 
-MEDIA_FUNNEL_SQL = """
-WITH n_ AS (SELECT doc_id, length(text) AS n FROM documents),
-pay AS (
-  SELECT doc_id, octet_length(CAST(text AS BLOB)) AS n_bytes FROM documents
-),
-sized AS (SELECT doc_id, n_bytes FROM pay WHERE n_bytes >= 64),
-samp AS (
-  SELECT d.doc_id, t.i,
-         ascii(substr(d.text, CAST((t.i * n_.n) // 32 AS INT) + 1, 1)) AS s
-  FROM documents d JOIN n_ USING (doc_id), unnest(range(0, 32)) AS t(i)
-  WHERE n_.n > 0
-),
-tot AS (SELECT doc_id, sum(s) AS tot FROM samp GROUP BY 1),
-fp0 AS (
-  SELECT samp.doc_id,
-         sum(CASE WHEN 32 * s > tot THEN CAST(1 AS BIGINT) << i
-                  ELSE 0 END) AS phash
-  FROM samp JOIN tot USING (doc_id) GROUP BY 1
-),
-fp AS (
-  SELECT doc_id, phash FROM fp0
-  UNION ALL
-  SELECT doc_id, CAST(0 AS BIGINT) FROM n_ WHERE n = 0
-),
-nd AS (
-  SELECT s.doc_id, s.n_bytes
-  FROM sized s JOIN fp j USING (doc_id)
-  WHERE NOT EXISTS (
-    SELECT 1 FROM sized s2 JOIN fp a ON a.doc_id = s2.doc_id
-    WHERE a.doc_id < j.doc_id
-      AND bit_count(xor(a.phash, j.phash)) <= 3
-  )
-),
-aw AS (
+def media_gate_ctes(nd: str) -> str:
+    """THE SQL twin of `_media_gate_chain` over the near-dup survivors
+    `nd` (doc_id, n_bytes), reading payloads from `documents`: silence
+    gate `loud` (< 4 of 8 PCM windows silent), frame-diversity gate
+    `varied` (>= 2 distinct keyframe-window pHashes) and cross-modal
+    alignment gate `alf` (caption-vs-media cosine >= 19/20 in the
+    exact-integer lattice).  `loud`, `varied` and the caller's `nd` are
+    AS MATERIALIZED: each feeds a later gate and the report, and DuckDB
+    re-plans an inlined CTE at every reference (the media funnels needed
+    over 1 GB and ~3 s for 500 docs without it)."""
+    return f"""aw AS (
   SELECT nd.doc_id, CAST(t.i AS INT) AS wi,
          (octet_length(CAST(d.text AS BLOB)) // 2) // 8 AS wl, d.text
-  FROM nd JOIN documents d USING (doc_id), unnest(range(0, 8)) AS t(i)
+  FROM {nd} nd JOIN documents d USING (doc_id), unnest(range(0, 8)) AS t(i)
 ),
 av AS (
   SELECT doc_id, wi, wl,
@@ -2954,36 +2822,13 @@ asil AS (
   FROM aw LEFT JOIN ae USING (doc_id, wi)
   GROUP BY 1
 ),
-loud AS (
-  SELECT nd.doc_id, nd.n_bytes FROM nd JOIN asil USING (doc_id)
+loud AS MATERIALIZED (
+  SELECT nd.doc_id, nd.n_bytes FROM {nd} nd JOIN asil USING (doc_id)
   WHERE n_sil < 4
 ),
-fr AS (
-  SELECT l.doc_id, CAST(t.i AS INT) AS frame_idx,
-         substr(d.text,
-                CAST(t.i * (octet_length(CAST(d.text AS BLOB)) // 4) AS INT) + 1,
-                CAST(octet_length(CAST(d.text AS BLOB)) // 4 AS INT)) AS ftext
-  FROM loud l JOIN documents d USING (doc_id), unnest(range(0, 4)) AS t(i)
-),
-fn AS (SELECT doc_id, frame_idx, length(ftext) AS n FROM fr),
-fsamp AS (
-  SELECT fr.doc_id, fr.frame_idx, t.i,
-         ascii(substr(fr.ftext, CAST((t.i * fn.n) // 32 AS INT) + 1, 1)) AS s
-  FROM fr JOIN fn USING (doc_id, frame_idx), unnest(range(0, 32)) AS t(i)
-  WHERE fn.n > 0
-),
-ftot AS (SELECT doc_id, frame_idx, sum(s) AS tot FROM fsamp GROUP BY 1, 2),
-ffp AS (
-  SELECT fsamp.doc_id, fsamp.frame_idx,
-         sum(CASE WHEN 32 * s > tot THEN CAST(1 AS BIGINT) << i
-                  ELSE 0 END) AS fhash
-  FROM fsamp JOIN ftot USING (doc_id, frame_idx) GROUP BY 1, 2
-),
-fall AS (
-  SELECT fn.doc_id, fn.frame_idx, coalesce(ffp.fhash, 0) AS fhash
-  FROM fn LEFT JOIN ffp USING (doc_id, frame_idx)
-),
-varied AS (
+loudt AS (SELECT l.doc_id, d.text FROM loud l JOIN documents d USING (doc_id)),
+{frame_phash_ctes("loudt")},
+varied AS MATERIALIZED (
   SELECT l.doc_id, l.n_bytes FROM loud l JOIN (
     SELECT doc_id, count(DISTINCT fhash) AS nd_ FROM fall GROUP BY 1
   ) v USING (doc_id)
@@ -3015,7 +2860,12 @@ alf AS (
       CAST(m0*m0 + m1*m1 + m2*m2 + m3*m3 AS BIGINT) AS b2
     FROM ai
   ) WHERE dd > 0 AND a2 > 0 AND b2 > 0 AND dd*dd*400 >= 361*a2*b2
-)
+)"""
+
+
+# the per-stage report both media-funnel oracles end with, over their
+# pay / sized / nd stages and the media_gate_ctes survivors
+_MEDIA_FUNNEL_REPORT = """
 SELECT 1 AS stage_ord, 'input' AS stage, count(*) AS n_docs,
        CAST(coalesce(sum(n_bytes), 0) AS BIGINT) AS n_bytes FROM pay
 UNION ALL
@@ -3029,6 +2879,23 @@ SELECT 5, 'frame_diversity', count(*), CAST(coalesce(sum(n_bytes), 0) AS BIGINT)
 UNION ALL
 SELECT 6, 'align_gate', count(*), CAST(coalesce(sum(n_bytes), 0) AS BIGINT) FROM alf
 """
+
+MEDIA_FUNNEL_SQL = f"""
+WITH {phash_ctes("documents")},
+pay AS (
+  SELECT doc_id, octet_length(CAST(text AS BLOB)) AS n_bytes FROM documents
+),
+sized AS (SELECT doc_id, n_bytes FROM pay WHERE n_bytes >= 64),
+nd AS MATERIALIZED (
+  SELECT s.doc_id, s.n_bytes
+  FROM sized s JOIN ph_fp j USING (doc_id)
+  WHERE NOT EXISTS (
+    SELECT 1 FROM sized s2 JOIN ph_fp a ON a.doc_id = s2.doc_id
+    WHERE a.doc_id < j.doc_id
+      AND bit_count(xor(a.phash, j.phash)) <= 3
+  )
+),
+{media_gate_ctes("nd")}{_MEDIA_FUNNEL_REPORT}"""
 
 
 def stream_media_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3093,56 +2960,20 @@ def stream_media_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     loud, varied, aligned = _media_gate_chain(nd, docs)
 
-    def stage(df, ordinal, name):
-        return df.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("n_bytes"), F.lit(0)).cast("long").alias("n_bytes"),
-        ).select(
-            F.lit(ordinal).alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            "n_docs",
-            "n_bytes",
-        )
-
-    return (
-        stage(pay, 1, "input")
-        .unionByName(stage(sized, 2, "size_gate"))
-        .unionByName(stage(nd, 3, "phash_dedup"))
-        .unionByName(stage(loud, 4, "silence_gate"))
-        .unionByName(stage(varied, 5, "frame_diversity"))
-        .unionByName(stage(aligned, 6, "align_gate"))
-    )
+    return _media_funnel_report(pay, sized, nd, loud, varied, aligned)
 
 
-STREAM_MEDIA_FUNNEL_SQL = """
-WITH n_ AS (SELECT doc_id, length(text) AS n FROM documents),
+STREAM_MEDIA_FUNNEL_SQL = f"""
+WITH {phash_ctes("documents")},
 pay AS (
   SELECT doc_id, octet_length(CAST(text AS BLOB)) AS n_bytes FROM documents
 ),
 sized AS (SELECT doc_id, n_bytes FROM pay WHERE n_bytes >= 64),
-samp AS (
-  SELECT d.doc_id, t.i,
-         ascii(substr(d.text, CAST((t.i * n_.n) // 32 AS INT) + 1, 1)) AS s
-  FROM documents d JOIN n_ USING (doc_id), unnest(range(0, 32)) AS t(i)
-  WHERE n_.n > 0
-),
-tot AS (SELECT doc_id, sum(s) AS tot FROM samp GROUP BY 1),
-fp0 AS (
-  SELECT samp.doc_id,
-         sum(CASE WHEN 32 * s > tot THEN CAST(1 AS BIGINT) << i
-                  ELSE 0 END) AS phash
-  FROM samp JOIN tot USING (doc_id) GROUP BY 1
-),
-fp AS (
-  SELECT doc_id, phash FROM fp0
-  UNION ALL
-  SELECT doc_id, CAST(0 AS BIGINT) FROM n_ WHERE n = 0
-),
 ndf AS (
   SELECT s.doc_id, s.doc_id % 3 AS b, f.phash, s.n_bytes
-  FROM sized s JOIN fp f USING (doc_id)
+  FROM sized s JOIN ph_fp f USING (doc_id)
 ),
-nd AS (
+nd AS MATERIALIZED (
   SELECT j.doc_id, j.n_bytes FROM ndf j
   WHERE NOT EXISTS (
     SELECT 1 FROM ndf a
@@ -3150,107 +2981,7 @@ nd AS (
       AND bit_count(xor(a.phash, j.phash)) <= 3
   )
 ),
-aw AS (
-  SELECT nd.doc_id, CAST(t.i AS INT) AS wi,
-         (octet_length(CAST(d.text AS BLOB)) // 2) // 8 AS wl, d.text
-  FROM nd JOIN documents d USING (doc_id), unnest(range(0, 8)) AS t(i)
-),
-av AS (
-  SELECT doc_id, wi, wl,
-         ascii(substr(text, CAST(2 * (wi * wl + t.j) + 1 AS INT), 1))
-         + 256 * ascii(substr(text, CAST(2 * (wi * wl + t.j) + 2 AS INT), 1))
-         AS v
-  FROM aw, unnest(range(0, wl)) AS t(j)
-),
-ae AS (
-  SELECT doc_id, wi,
-         sum(CASE WHEN v >= 32768
-                  THEN CAST(v - 65536 AS BIGINT) * (v - 65536)
-                  ELSE CAST(v AS BIGINT) * v END) AS energy
-  FROM av GROUP BY 1, 2
-),
-asil AS (
-  SELECT aw.doc_id,
-         sum(CASE WHEN coalesce(ae.energy, 0) <= 1000 * aw.wl
-                  THEN 1 ELSE 0 END) AS n_sil
-  FROM aw LEFT JOIN ae USING (doc_id, wi)
-  GROUP BY 1
-),
-loud AS (
-  SELECT nd.doc_id, nd.n_bytes FROM nd JOIN asil USING (doc_id)
-  WHERE n_sil < 4
-),
-fr AS (
-  SELECT l.doc_id, CAST(t.i AS INT) AS frame_idx,
-         substr(d.text,
-                CAST(t.i * (octet_length(CAST(d.text AS BLOB)) // 4) AS INT) + 1,
-                CAST(octet_length(CAST(d.text AS BLOB)) // 4 AS INT)) AS ftext
-  FROM loud l JOIN documents d USING (doc_id), unnest(range(0, 4)) AS t(i)
-),
-fn AS (SELECT doc_id, frame_idx, length(ftext) AS n FROM fr),
-fsamp AS (
-  SELECT fr.doc_id, fr.frame_idx, t.i,
-         ascii(substr(fr.ftext, CAST((t.i * fn.n) // 32 AS INT) + 1, 1)) AS s
-  FROM fr JOIN fn USING (doc_id, frame_idx), unnest(range(0, 32)) AS t(i)
-  WHERE fn.n > 0
-),
-ftot AS (SELECT doc_id, frame_idx, sum(s) AS tot FROM fsamp GROUP BY 1, 2),
-ffp AS (
-  SELECT fsamp.doc_id, fsamp.frame_idx,
-         sum(CASE WHEN 32 * s > tot THEN CAST(1 AS BIGINT) << i
-                  ELSE 0 END) AS fhash
-  FROM fsamp JOIN ftot USING (doc_id, frame_idx) GROUP BY 1, 2
-),
-fall AS (
-  SELECT fn.doc_id, fn.frame_idx, coalesce(ffp.fhash, 0) AS fhash
-  FROM fn LEFT JOIN ffp USING (doc_id, frame_idx)
-),
-varied AS (
-  SELECT l.doc_id, l.n_bytes FROM loud l JOIN (
-    SELECT doc_id, count(DISTINCT fhash) AS nd_ FROM fall GROUP BY 1
-  ) v USING (doc_id)
-  WHERE v.nd_ >= 2
-),
-tfa AS (
-  SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nt
-  FROM documents
-),
-ai AS (
-  SELECT v.doc_id, v.n_bytes,
-    length(tfa.nt) % 256 AS t0,
-    CASE WHEN length(tfa.nt) = 0 THEN 0 ELSE ascii(substr(tfa.nt, 1, 1)) END AS t1,
-    CASE WHEN length(tfa.nt) = 0 THEN 0
-         ELSE ascii(substr(tfa.nt, length(tfa.nt), 1)) END AS t2,
-    (length(tfa.nt) * 7) % 256 AS t3,
-    octet_length(CAST(d.text AS BLOB)) % 256 AS m0,
-    CASE WHEN length(d.text) = 0 THEN 0 ELSE ascii(substr(d.text, 1, 1)) END AS m1,
-    CASE WHEN length(d.text) = 0 THEN 0
-         ELSE ascii(substr(d.text, length(d.text), 1)) END AS m2,
-    (octet_length(CAST(d.text AS BLOB)) * 7) % 256 AS m3
-  FROM varied v JOIN documents d USING (doc_id) JOIN tfa USING (doc_id)
-),
-alf AS (
-  SELECT doc_id, n_bytes FROM (
-    SELECT doc_id, n_bytes,
-      CAST(t0*m0 + t1*m1 + t2*m2 + t3*m3 AS BIGINT) AS dd,
-      CAST(t0*t0 + t1*t1 + t2*t2 + t3*t3 AS BIGINT) AS a2,
-      CAST(m0*m0 + m1*m1 + m2*m2 + m3*m3 AS BIGINT) AS b2
-    FROM ai
-  ) WHERE dd > 0 AND a2 > 0 AND b2 > 0 AND dd*dd*400 >= 361*a2*b2
-)
-SELECT 1 AS stage_ord, 'input' AS stage, count(*) AS n_docs,
-       CAST(coalesce(sum(n_bytes), 0) AS BIGINT) AS n_bytes FROM pay
-UNION ALL
-SELECT 2, 'size_gate', count(*), CAST(coalesce(sum(n_bytes), 0) AS BIGINT) FROM sized
-UNION ALL
-SELECT 3, 'phash_dedup', count(*), CAST(coalesce(sum(n_bytes), 0) AS BIGINT) FROM nd
-UNION ALL
-SELECT 4, 'silence_gate', count(*), CAST(coalesce(sum(n_bytes), 0) AS BIGINT) FROM loud
-UNION ALL
-SELECT 5, 'frame_diversity', count(*), CAST(coalesce(sum(n_bytes), 0) AS BIGINT) FROM varied
-UNION ALL
-SELECT 6, 'align_gate', count(*), CAST(coalesce(sum(n_bytes), 0) AS BIGINT) FROM alf
-"""
+{media_gate_ctes("nd")}{_MEDIA_FUNNEL_REPORT}"""
 
 
 def stream_align_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3413,27 +3144,9 @@ def stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-STREAM_PHASH_SQL = """
-WITH n_ AS (SELECT doc_id, length(text) AS n FROM documents),
-samp AS (
-  SELECT d.doc_id, t.i,
-         ascii(substr(d.text, CAST((t.i * n_.n) // 32 AS INT) + 1, 1)) AS s
-  FROM documents d JOIN n_ USING (doc_id), unnest(range(0, 32)) AS t(i)
-  WHERE n_.n > 0
-),
-tot AS (SELECT doc_id, sum(s) AS tot FROM samp GROUP BY 1),
-fp AS (
-  SELECT samp.doc_id,
-         sum(CASE WHEN 32 * s > tot THEN CAST(1 AS BIGINT) << i
-                  ELSE 0 END) AS phash
-  FROM samp JOIN tot USING (doc_id) GROUP BY 1
-),
-fp2 AS (
-  SELECT doc_id, phash FROM fp
-  UNION ALL
-  SELECT doc_id, CAST(0 AS BIGINT) FROM n_ WHERE n = 0
-),
-f AS (SELECT doc_id, doc_id % 3 AS b, phash FROM fp2),
+STREAM_PHASH_SQL = f"""
+WITH {phash_ctes("documents")},
+f AS (SELECT doc_id, doc_id % 3 AS b, phash FROM ph_fp),
 dups AS (
   SELECT j.doc_id, min(s.doc_id) AS dup_of
   FROM f j JOIN f s
@@ -3506,42 +3219,12 @@ def stream_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-STREAM_AUDIO_SQL = """
-WITH p AS (
-  SELECT doc_id, text,
-         (octet_length(CAST(text AS BLOB)) // 2) // 32 AS wl
-  FROM documents
-),
-w AS (
-  SELECT doc_id, CAST(t.i AS INT) AS wi, wl, text
-  FROM p, unnest(range(0, 32)) AS t(i)
-  WHERE wl > 0
-),
-s AS (
-  SELECT doc_id, wi,
-         ascii(substr(text, CAST(2 * (wi * wl + t.j) + 1 AS INT), 1))
-         + 256 * ascii(substr(text, CAST(2 * (wi * wl + t.j) + 2 AS INT), 1))
-         AS v
-  FROM w, unnest(range(0, wl)) AS t(j)
-),
-e AS (
-  SELECT doc_id, wi,
-         sum(CASE WHEN v >= 32768
-                  THEN CAST(v - 65536 AS BIGINT) * (v - 65536)
-                  ELSE CAST(v AS BIGINT) * v END) AS energy
-  FROM s GROUP BY 1, 2
-),
-tot AS (SELECT doc_id, sum(energy) AS tot FROM e GROUP BY 1),
-fp AS (
-  SELECT e.doc_id,
-         sum(CASE WHEN 32 * energy > tot THEN CAST(1 AS BIGINT) << wi
-                  ELSE 0 END) AS ahash
-  FROM e JOIN tot USING (doc_id) GROUP BY 1
-),
+STREAM_AUDIO_SQL = f"""
+WITH {audio_fp_ctes("documents")},
 f AS (
   SELECT p.doc_id, p.doc_id % 3 AS b,
          CAST(coalesce(fp.ahash, 0) AS BIGINT) AS ahash
-  FROM p LEFT JOIN fp USING (doc_id)
+  FROM au_p p LEFT JOIN au_fp fp USING (doc_id)
 ),
 dups AS (
   SELECT j.doc_id, min(s.doc_id) AS dup_of
@@ -3608,33 +3291,8 @@ def stream_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-STREAM_FRAME_SQL = """
-WITH fr AS (
-  SELECT doc_id, CAST(t.i AS INT) AS frame_idx,
-         substr(text,
-                CAST(t.i * (octet_length(CAST(text AS BLOB)) // 4) AS INT) + 1,
-                CAST(octet_length(CAST(text AS BLOB)) // 4 AS INT)) AS ftext
-  FROM documents, unnest(range(0, 4)) AS t(i)
-),
-fn AS (SELECT doc_id, frame_idx, length(ftext) AS n FROM fr),
-fsamp AS (
-  SELECT fr.doc_id, fr.frame_idx, t.i,
-         ascii(substr(fr.ftext, CAST((t.i * fn.n) // 32 AS INT) + 1, 1)) AS s
-  FROM fr JOIN fn USING (doc_id, frame_idx), unnest(range(0, 32)) AS t(i)
-  WHERE fn.n > 0
-),
-ftot AS (SELECT doc_id, frame_idx, sum(s) AS tot FROM fsamp GROUP BY 1, 2),
-ffp AS (
-  SELECT fsamp.doc_id, fsamp.frame_idx,
-         sum(CASE WHEN 32 * s > tot THEN CAST(1 AS BIGINT) << i
-                  ELSE 0 END) AS fhash
-  FROM fsamp JOIN ftot USING (doc_id, frame_idx) GROUP BY 1, 2
-),
-fall AS (
-  SELECT fn.doc_id, fn.frame_idx,
-         CAST(coalesce(ffp.fhash, 0) AS BIGINT) AS fhash
-  FROM fn LEFT JOIN ffp USING (doc_id, frame_idx)
-),
+STREAM_FRAME_SQL = f"""
+WITH {frame_phash_ctes("documents")},
 jb AS (SELECT doc_id, doc_id % 3 AS b, frame_idx, fhash FROM fall),
 sb AS (SELECT DISTINCT doc_id, doc_id % 3 AS b, fhash FROM fall),
 cand AS (

@@ -15,6 +15,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _half_of_ram() -> str:
+    """Default driver heap: half of physical memory, so the local JVM
+    (heap plus off-heap) cannot outgrow the host."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 // (1 << 20)}m"
+
+
 def get_spark(
     app_name: str = "flume_spark",
     master: str | None = None,
@@ -45,7 +52,10 @@ def get_spark(
         # int64 micros (not legacy INT96): interoperable with pyarrow readers
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _half_of_ram()),
+        )
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -157,6 +157,8 @@ GRAPHS = {
     "star": [(50, leaf) for leaf in (51, 52, 53, 54, 55)] + [(56, 50)],
     "disjoint": [(10, 11), (11, 12), (20, 21), (30, 31), (31, 32), (32, 30)],
     "single_edge": [(7, 3)],
+    "cycle": [(5, 6), (6, 7), (7, 8), (8, 5)],
+    "two_components": [(4, 9), (9, 2), (15, 13), (13, 14)],
 }
 
 
@@ -183,3 +185,35 @@ def test_connected_components_rejects_string_ids(spark):
     df = spark.createDataFrame([("a", "b")], "doc_a string, doc_b string")
     with pytest.raises(TypeError):
         dedup.connected_components(df, "doc_a", "doc_b")
+
+
+# ---------------------------------------------------------------------------
+# components_ctes: the oracles' connected-components SQL, in DuckDB alone
+# ---------------------------------------------------------------------------
+
+
+def _components_sql(edges: list[tuple[int, int]]) -> dict[int, int]:
+    import duckdb
+
+    from flume_spark.queries.llm_ops import components_ctes
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE g (doc_a BIGINT, doc_b BIGINT)")
+    if edges:
+        con.executemany("INSERT INTO g VALUES (?, ?)", edges)
+    rows = con.execute(
+        f"WITH RECURSIVE {components_ctes('g')} "
+        "SELECT doc_id, component FROM components"
+    ).fetchall()
+    labels = dict(rows)
+    assert len(labels) == len(rows), "a node was labelled twice"
+    return labels
+
+
+@pytest.mark.parametrize("graph", sorted(GRAPHS))
+def test_components_fragment_matches_union_find(graph):
+    assert _components_sql(GRAPHS[graph]) == _union_find(GRAPHS[graph])
+
+
+def test_components_fragment_empty_edges():
+    assert _components_sql([]) == {}

@@ -48,8 +48,9 @@ def test_oriented_edges_degree_kills_hub_key(spark):
     """The skew gate from the round-6 verdict: on a planted-hub graph the
     id-ordered orientation concentrates ~deg²/4 wedge candidates on the
     hub's middle key, degree-ordering caps every key at deg·O(√m).  The
-    probe (probe_scale.py --tri) shows the same at 20k-80k vertices with
-    the id-ordered max key growing f² while degree-ordered stays flat."""
+    scale probe recorded in BASELINE.md ("Triangle-orientation skew
+    probe") shows the same at 20k-80k vertices with the id-ordered max
+    key growing f² while degree-ordered stays flat."""
     from flume_spark.operators import graph
 
     edges = _hub_graph(spark)
