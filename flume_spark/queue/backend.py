@@ -16,18 +16,25 @@ backend is a drop-in:
 | method            | parquet-log impl                | Delta/Iceberg impl |
 |-------------------|---------------------------------|--------------------|
 | next_seq          | fcntl-locked counter file       | commit version of the txn that carries the write |
-| append / append_rows | new part file (atomic rename) | `INSERT` / small AddFile commit |
+| append / append_rows | new part file (atomic rename); append_rows returns its path | `INSERT` / small AddFile commit |
 | publish           | staged dir + per-file rename    | staged commit (the transaction log IS the stage) |
+| n_files           | data-file listing / commit file list | live-file count of the snapshot |
 | log / current / as_of | read + latest-per-jid window | table read / `VERSION AS OF`; with CDF, `current` is the materialized latest view |
 | log/current(at_version=) / log_diff | commit-snapshot read + release diff (OptimisticLogStore only — needs versioned commits) | `VERSION AS OF` reads + CDF between versions |
 | compact / maybe_compact | snapshot-list rewrite + unlink | `OPTIMIZE` + `VACUUM`; archive = partition move |
 | set/clear/has_flag | flag files under <path>.control | rows in a control table (txn-visible to all writers) |
 | count_rows / read_rows | parquet footer metadata / pyarrow read | driver-side `collect()` of a bounded commit |
 
+Driver-sized writes (enqueue, claim, ack) have ONE commit path:
+`append_rows`.  A trigger collects its demand-bounded claim plan on the
+driver, commits it with `append_rows` (durable before any worker runs) and
+dispatches from exactly the returned files; `publish` is left to
+data-sized writes (`enqueue_from`, compaction).
+
 Concurrency stance: seq ordering across instances comes from the backend's
 atomic counter (≙ Delta's serialized commits), claim serialization from
 `claim_lock` — one exclusive per-queue lock held across every trigger's
-due-read→claim-publish span (≙ the reference's bulk-dequeue lock,
+due-read→claim-commit span (≙ the reference's bulk-dequeue lock,
 redis/lock.ex:8-41) — rate-limit window atomicity from the
 SharedLedgerLimiter's per-key lock, and compaction's snapshot-list contract
 tolerates concurrent appenders (store.py::compact docstring).  A Delta
@@ -59,9 +66,11 @@ class LogBackend(ABC):
         """Distributed append of log records (Delta: `append` write)."""
 
     @abstractmethod
-    def append_rows(self, rows: list[dict]) -> None:
+    def append_rows(self, rows: list[dict]) -> list[str]:
         """Driver-side small append, no Spark job (Delta: one AddFile
-        commit).  Used by enqueue/ack — control-plane row counts."""
+        commit).  Used by enqueue, claim and ack — control-plane row
+        counts.  Returns handles to the committed units, readable by
+        executors once this returns; no rows commit nothing and return []."""
 
     @abstractmethod
     def publish(self, df: DataFrame, tag: str) -> list[str]:
@@ -99,6 +108,11 @@ class LogBackend(ABC):
     # -- maintenance --------------------------------------------------------
 
     @abstractmethod
+    def n_files(self) -> int:
+        """Live data files — the fragmentation `maybe_compact` thresholds
+        (cheap: a listing, never a data read)."""
+
+    @abstractmethod
     def compact(self, archive_succeeded: bool = False, min_age_s: float = 0.0) -> None:
         """Rewrite to one record per jid (Delta: OPTIMIZE + VACUUM); with
         `archive_succeeded`, move succeeded jobs to the archive (reference:
@@ -120,7 +134,7 @@ class LogBackend(ABC):
         """Context manager: exclusive per-queue claim lock, shared across
         every manager instance of this store — the reference's bulk-dequeue
         lock (redis/lock.ex:8-41).  Held across a trigger's due-read →
-        claim-publish span so two instances can never both observe the same
+        claim-commit span so two instances can never both observe the same
         job as due (double-claim).  Parquet-log impl: flock on a control
         file; a Delta/Iceberg impl may return a no-op guard and rely on
         optimistic commit conflicts instead."""

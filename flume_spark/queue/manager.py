@@ -28,7 +28,7 @@ from flume_spark.queue.backoff import DEFAULT_INITIAL_MS, DEFAULT_MAX_MS, backof
 from flume_spark.queue.instrumentation import Telemetry
 from flume_spark.queue.logger import DefaultLogger, FlumeLogger
 from flume_spark.queue.ratelimit import SlidingWindowLimiter
-from flume_spark.queue.store import JobStore
+from flume_spark.queue.store import JobStore, arrow_to_rows
 from flume_spark.queue.workers import WorkerRegistry, dispatch_bulk, dispatch_single
 
 DEFAULT_MAX_RETRIES = 5  # lib/flume/config.ex:8 (@max_retries 5)
@@ -96,7 +96,7 @@ class QueueManager:
         # auto-compaction never unlinks claim files another manager is still
         # lazily reading mid-trigger.  Claims themselves are multi-instance
         # safe for EVERY queue: each trigger holds the store's per-queue
-        # claim_lock across its due-read -> claim-publish span (the
+        # claim_lock across its due-read -> claim-commit span (the
         # reference's bulk-dequeue lock, redis/lock.ex:8-41), so two
         # instances can never both observe a job as due.
         self.compact_grace_s = compact_grace_s
@@ -481,11 +481,14 @@ class QueueManager:
         is the difference between one shuffle per trigger and one per queue.
 
         Concurrency (multiple PipelineRunner threads on one manager):
-        triggers run concurrently; compaction is exclusive — it waits for
-        zero in-flight triggers and blocks new ones while it rewrites the
-        log, because a concurrent trigger's Spark jobs would otherwise read
-        the exact files compaction unlinks.  (Cross-INSTANCE compaction
-        safety is the separate `compact_grace_s` contract.)
+        triggers run concurrently; compaction is exclusive — once the log
+        is past `compact_max_files`, the trigger that sees it blocks new
+        triggers, waits out the in-flight ones and rewrites the log, because
+        a concurrent trigger's Spark jobs would otherwise read the exact
+        files compaction unlinks.  Waiting (rather than skipping while any
+        trigger is in flight) keeps runners that re-trigger back to back
+        from starving it.  (Cross-INSTANCE compaction safety is the
+        separate `compact_grace_s` contract.)
         """
         with self._trigger_cv:
             while self._compacting:
@@ -497,23 +500,28 @@ class QueueManager:
             with self._trigger_cv:
                 self._active_triggers -= 1
                 self._trigger_cv.notify_all()
-        # opportunistic compaction, exclusive vs this process's triggers; a
-        # busy moment just defers it to the next trigger
-        if self.compact_max_files is not None:
+        # auto-compaction, exclusive vs this process's triggers
+        if (
+            self.compact_max_files is None
+            or self.store.n_files() <= self.compact_max_files
+        ):
+            return stats
+        with self._trigger_cv:
+            if self._compacting:
+                return stats  # another thread is already on it
+            self._compacting = True
+            while self._active_triggers:
+                self._trigger_cv.wait()
+        try:
+            self.store.maybe_compact(
+                self.compact_max_files,
+                archive_succeeded=self.archive_succeeded,
+                min_age_s=self.compact_grace_s,
+            )
+        finally:
             with self._trigger_cv:
-                if self._active_triggers or self._compacting:
-                    return stats
-                self._compacting = True
-            try:
-                self.store.maybe_compact(
-                    self.compact_max_files,
-                    archive_succeeded=self.archive_succeeded,
-                    min_age_s=self.compact_grace_s,
-                )
-            finally:
-                with self._trigger_cv:
-                    self._compacting = False
-                    self._trigger_cv.notify_all()
+                self._compacting = False
+                self._trigger_cv.notify_all()
         return stats
 
     def _run_trigger(
@@ -540,7 +548,7 @@ class QueueManager:
         # deadlock-free because every trigger in every instance uses the
         # same order):
         #  1. the store's per-queue claim_lock, held across the due-read ->
-        #     claim-publish span for EVERY admitted queue — the reference's
+        #     claim-commit span for EVERY admitted queue — the reference's
         #     bulk_dequeue_lock (redis/lock.ex:8-41): two instances can
         #     never both observe a job as due, so no queue (rate-limited or
         #     not) can be double-claimed;
@@ -608,33 +616,31 @@ class QueueManager:
             }
 
             # claim append (≙ MULTI {ZADD processing, LTRIM},
-            # bulk_dequeue.ex:242-295).  The claim batch is staged to a
-            # scratch dir, then only data-bearing part files are renamed into
-            # the log: an EMPTY claim publishes nothing (otherwise every
-            # zero-row part file would wake any streaming reader of the log
-            # and re-trigger a claim, forever), and dispatch reads exactly
-            # the claim files, not a full log scan.
+            # bulk_dequeue.ex:242-295).  Claim rows are bounded by Σ demand
+            # (the reference's own bound — its whole claim travels through
+            # one Redis reply), so the plan is collected to the driver once
+            # (Arrow keeps timestamps UTC) and committed as ONE file through
+            # the driver-sized append path, still under the claim locks: the
+            # claim is durable before any worker runs, an EMPTY claim commits
+            # nothing (a zero-row file would wake any streaming reader of
+            # the log for nothing), and dispatch reads exactly the claim
+            # file, not a full log scan.
             claim_seq = self.store.next_seq()
             claim_t0 = time.perf_counter()
             claim_df = self.claim_plan(
                 {q: d for q, (_, d) in demands.items()}, now, claim_seq, shared_budgets
             )
-            claim_paths = self.store.publish(claim_df, f"claim-{claim_seq}")
-            if not claim_paths:
+            claim_rows = arrow_to_rows(claim_df.toArrow())
+            if not claim_rows:
                 return stats
-            # claim rows are bounded by Σ demand (the reference's own bound —
-            # its whole claim travels through one Redis reply), so the
-            # control-plane bookkeeping is driver-side: zero extra Spark jobs
-            claim_rows = self.store.read_rows(claim_paths)
+            claim_paths = self.store.append_rows(claim_rows)
             # producer.ex:156 pulled-count line (debug-gated)
             self.logger.debug(
                 f"[{','.join(sorted(demands))}] [Producer] pulled "
                 f"{len(claim_rows)} events from source",
                 {},
             )
-            claimed = self.spark.read.schema(self.store.log().schema).parquet(
-                *claim_paths
-            )
+            claimed = self.spark.read.schema(S.JOB_LOG_SCHEMA).parquet(*claim_paths)
             per_queue: dict[str, int] = {}
             for r in claim_rows:
                 per_queue[r["queue"]] = per_queue.get(r["queue"], 0) + 1

@@ -213,14 +213,16 @@ class OptimisticLogStore(LogBackend):
     def append(self, df: DataFrame) -> None:
         self.publish(df, f"append-{uuid.uuid4().hex[:12]}")
 
-    def append_rows(self, rows: list[dict]) -> None:
+    def append_rows(self, rows: list[dict]) -> list[str]:
         if not rows:
-            return
+            return []
         table = rows_to_arrow_table(rows)
         name = f"part-{uuid.uuid4().hex}.parquet"
-        pq.write_table(table, os.path.join(self.path, name))
+        path = os.path.join(self.path, name)
+        pq.write_table(table, path)
         # data file first (invisible), then the commit makes it live
         self._commit_files([name])
+        return [path]
 
     def publish(self, df: DataFrame, tag: str) -> list[str]:
         """Distributed write -> stage -> move data files in (still invisible:
@@ -391,14 +393,16 @@ class OptimisticLogStore(LogBackend):
 
     # -- maintenance ----------------------------------------------------------
 
+    def n_files(self) -> int:
+        return len(self._latest()[1]["files"])
+
     def maybe_compact(
         self,
         max_files: int = 256,
         archive_succeeded: bool = False,
         min_age_s: float = 0.0,
     ) -> bool:
-        _, state = self._latest()
-        if len(state["files"]) <= max_files:
+        if self.n_files() <= max_files:
             return False
         self.compact(archive_succeeded=archive_succeeded, min_age_s=min_age_s)
         return True
@@ -567,7 +571,7 @@ class OptimisticLogStore(LogBackend):
         lock_lease_s/3, so a critical section longer than the lease (a
         hot-queue claim trigger scales with backlog) does NOT silently
         lose mutual exclusion — without renewal, a second instance would
-        take over mid-publish and double-claim.  The residual exposure is
+        take over mid-claim and double-claim.  The residual exposure is
         a holder process STALLED longer than a full lease (GC pause /
         SIGSTOP) — the standard lease-lock caveat; if takeover is then
         detected at release time, a loud warning is emitted rather than a

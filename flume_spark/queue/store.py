@@ -91,15 +91,12 @@ def rows_to_arrow_table(rows: list[dict]) -> pa.Table:
     return pa.Table.from_arrays(arrays, schema=_ARROW_SCHEMA)
 
 
-def read_parquet_rows(paths: list[str]) -> list[dict]:
-    """Driver-side pyarrow read of specific log files as plain dicts (UTC
-    naive timestamps, dict contexts) — shared by every backend's bounded
-    control-plane read."""
+def arrow_to_rows(tbl: pa.Table) -> list[dict]:
+    """Job-log rows of an Arrow table as plain dicts (UTC naive timestamps,
+    dict contexts) — the row form of the trigger's claim and ack
+    bookkeeping."""
     from datetime import datetime, timezone
 
-    tbl = pa.concat_tables(
-        [pq.read_table(p) for p in paths], promote_options="permissive"
-    )
     rows = tbl.to_pylist()
     for r in rows:
         for k, v in r.items():
@@ -108,6 +105,16 @@ def read_parquet_rows(paths: list[str]) -> list[dict]:
         if isinstance(r.get("context"), list):
             r["context"] = dict(r["context"])
     return rows
+
+
+def read_parquet_rows(paths: list[str]) -> list[dict]:
+    """Driver-side pyarrow read of specific log files as plain dicts —
+    shared by every backend's bounded control-plane read."""
+    return arrow_to_rows(
+        pa.concat_tables(
+            [pq.read_table(p) for p in paths], promote_options="permissive"
+        )
+    )
 
 
 class JobStore(LogBackend):
@@ -161,21 +168,24 @@ class JobStore(LogBackend):
     def append(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.path)
 
-    def append_rows(self, rows: list[dict]) -> None:
+    def append_rows(self, rows: list[dict]) -> list[str]:
         """Driver-side fast path: commit driver-local rows as one parquet
-        file directly (pyarrow), no Spark job.  Enqueue is a driver/producer
-        operation on a few rows — a distributed write would be ~50x slower
-        in scheduling overhead alone.  In the Delta target this is a small
+        file directly (pyarrow), no Spark job, and return its path ([] for
+        no rows: nothing is written).  Enqueues, claims and acks are
+        driver-sized — a distributed write would be ~50x slower in
+        scheduling overhead alone.  In the Delta target this is a small
         AddFile commit; the reference analog is a single RPUSH
         (redis/client.ex:183-185).
         """
         if not rows:
-            return
+            return []
         table = rows_to_arrow_table(rows)
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(self.path, f".{name}.tmp")
+        final = os.path.join(self.path, name)
         pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(self.path, name))  # atomic visibility
+        os.rename(tmp, final)  # atomic visibility
+        return [final]
 
     @staticmethod
     def count_rows(paths: list[str]) -> int:
@@ -200,10 +210,10 @@ class JobStore(LogBackend):
 
         Why not a plain append: Spark materializes at least one ZERO-ROW
         part file for an empty frame, which any streaming reader of the log
-        treats as an arrival — an empty claim would wake the stream, whose
-        trigger claims again, forever.  Rename is atomic within a filesystem,
-        so readers never see partial files (Delta's staged-commit, in
-        miniature).
+        treats as an arrival — an empty distributed enqueue or compaction
+        output would wake the stream for nothing.  Rename is atomic within a
+        filesystem, so readers never see partial files (Delta's
+        staged-commit, in miniature).
         """
         return self._publish_to(df, tag, self.path)
 
@@ -215,6 +225,7 @@ class JobStore(LogBackend):
         return [os.path.join(dest, n) for n in names]
 
     def n_files(self) -> int:
+        """Live log files — the fragmentation `maybe_compact` thresholds."""
         return sum(1 for n in os.listdir(self.path) if n.endswith(".parquet"))
 
     def maybe_compact(
@@ -231,7 +242,7 @@ class JobStore(LogBackend):
         `min_age_s` > 0 (QueueManager's `compact_grace_s`) spares files
         younger than the grace — required when several instances share one
         store, since another manager may still be lazily reading the claim
-        files it just published mid-trigger.  Single-driver deployments
+        file it just committed mid-trigger.  Single-driver deployments
         (the default) compact everything immediately."""
         if self.n_files() <= max_files:
             return False
@@ -312,7 +323,7 @@ class JobStore(LogBackend):
 
         `min_age_s` excludes recently-written files from BOTH the snapshot
         and the deletions: another instance may still be lazily reading the
-        files it just published (its dispatch collects mid-trigger), and
+        claim file it just committed (its dispatch reads it mid-trigger), and
         unlinking them under it would kill that trigger.  Young files stay
         live; their higher `seq` keeps winning the latest-per-jid window
         over the compacted record, so state is unchanged.  Deletions are
@@ -416,8 +427,8 @@ class JobStore(LogBackend):
         store — the reference's bulk-dequeue lock (redis/lock.ex:8-41,
         mutual-exclusion test test/flume/redis/lock_test.exs:9-44).  An
         flock on a control file next to the log, held across the trigger's
-        due-read → claim-publish span: the second claimer's log listing
-        happens only after the first's claim files are renamed in, so it
+        due-read → claim-commit span: the second claimer's log listing
+        happens only after the first's claim file is renamed in, so it
         sees status=processing with a fresh lease and claims nothing.
         flock is per-open-file-description, so it also serializes
         concurrent runner threads inside one process."""

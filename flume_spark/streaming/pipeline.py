@@ -9,6 +9,8 @@ log is the arrival signal; each micro-batch invokes the same transactional
 `QueueManager.run_once` the batch path uses (claim → dispatch → ack).
 Admission control:
 - poll cadence    ≙ Trigger.ProcessingTime (default 2 s, like @default_interval)
+- demand replenishment ≙ the poll loop re-triggering at once while a claim
+                    finds work (producer.ex:117-152,180-191)
 - max_demand      ≙ the claim LIMIT inside run_once
 - maxFilesPerTrigger bounds arrival processing per micro-batch
 - rate limiting   ≙ the driver-side sliding-window governor in run_once
@@ -22,6 +24,7 @@ SURVEY.md §2.8 ST2).
 from __future__ import annotations
 
 import threading
+import traceback
 
 from pyspark.sql import SparkSession
 
@@ -43,6 +46,16 @@ class PipelineRunner:
     serialized by `self._lock` (the lock's real job: foreachBatch thread vs
     poll thread vs stop()'s drain — Spark already serializes foreachBatch
     with itself).
+
+    Wake-up rule (the reference producer's demand replenishment: it fetches
+    again as soon as finished jobs return demand and waits its poll
+    interval only after an empty fetch, producer.ex:117-152,180-191): a
+    trigger from either path that claims at least one job wakes the poll
+    loop, which triggers again at once; after an empty, paused or stopped
+    tick it waits `poll_seconds`.  A trigger that raises is logged through
+    the manager's logger and the loop keeps polling, so scheduled, retry
+    and resumed jobs still drain.  Under load the poll loop runs most
+    triggers and stream batches wait on the lock.
     """
 
     def __init__(
@@ -67,6 +80,7 @@ class PipelineRunner:
         self.query = None
         self._lock = threading.Lock()
         self._stop_event = threading.Event()
+        self._wake = threading.Event()  # set by a trigger that found work
         self._poll_thread: threading.Thread | None = None
         self.batches_run = 0
 
@@ -76,8 +90,10 @@ class PipelineRunner:
                 return
             if self.manager.is_paused(self.pipeline):
                 return  # F3 pause gate (producer.ex:111-115): skip fetch
-            self.manager.run_once(self.pipeline)
+            claimed = self.manager.run_once(self.pipeline)["claimed"]
             self.batches_run += 1
+        if claimed:
+            self._wake.set()  # demand replenished: fetch again at once
 
     def _on_batch(self, batch_df, batch_id: int) -> None:
         # The arriving records are only the wake-up signal; run_once reads
@@ -85,11 +101,26 @@ class PipelineRunner:
         self._tick()
 
     def _poll_loop(self) -> None:
-        while not self._stop_event.wait(self.poll_seconds):
-            self._tick()
+        while True:
+            self._wake.wait(self.poll_seconds)
+            self._wake.clear()
+            if self._stop_event.is_set():
+                return
+            try:
+                self._tick()
+            except Exception as exc:  # noqa: BLE001 — keep polling
+                self.manager.logger.error(
+                    f"{self.pipeline.queue} [Producer] trigger failed: "
+                    f"{type(exc).__name__}: {exc}",
+                    {
+                        "pipeline": self.pipeline.name,
+                        "backtrace": traceback.format_exc(limit=5),
+                    },
+                )
 
     def start(self):
         self._stop_event.clear()
+        self._wake.clear()
         stream = read_stream(
             self.spark,
             self.manager.store.path,
@@ -117,9 +148,10 @@ class PipelineRunner:
         exits, any IN-FLIGHT trigger finishes (we wait on its lock), then
         the streaming query stops.  A micro-batch that starts after the
         drain sees the stop event and does nothing, so no claim is left
-        between publish and ack by a routine stop (ST6 pause semantics —
+        between claim commit and ack by a routine stop (ST6 pause semantics —
         in-flight work completes first)."""
         self._stop_event.set()
+        self._wake.set()  # end the poll loop's wait now
         if self._poll_thread is not None:
             self._poll_thread.join(timeout=30)
             self._poll_thread = None

@@ -122,6 +122,41 @@ def test_read_rows_and_count(backend):
     assert {r["jid"] for r in rows} == {"a", "b"}
 
 
+def test_append_rows_returns_committed_paths(backend):
+    """append_rows returns the unit it committed — a trigger dispatches
+    from exactly that file — and commits nothing for no rows."""
+    import os
+
+    assert backend.append_rows([]) == []
+    assert backend.is_empty()
+    s = backend.next_seq()
+    paths = backend.append_rows([_row("a", "pending", s), _row("b", "pending", s)])
+    assert len(paths) == 1 and os.path.exists(paths[0])
+    assert backend.n_files() == 1
+    assert backend.count_rows(paths) == 2
+    assert {r["jid"] for r in backend.read_rows(paths)} == {"a", "b"}
+    assert {r["jid"] for r in backend.current().collect()} == {"a", "b"}
+
+
+def test_empty_claim_commits_nothing(backend, spark):
+    """A trigger whose claim finds nothing due commits nothing: no log
+    file, no change to the live file set, no staging residue."""
+    import os
+
+    from flume_spark.queue import QueueManager, WorkerRegistry
+    from flume_spark.queue.manager import Pipeline
+
+    mgr = QueueManager(
+        spark, backend, WorkerRegistry(), pipelines=[Pipeline(name="p", queue="q")]
+    )
+    mgr.enqueue_in("q", 3600.0, "W", [])  # pending, not yet due
+    before = sorted(os.listdir(backend.path))
+    assert mgr.run_once("p")["claimed"] == 0
+    assert sorted(os.listdir(backend.path)) == before
+    assert backend.n_files() == 1
+    assert not os.path.exists(backend.path.rstrip("/") + ".staging")
+
+
 def test_processed_marker_contract(backend):
     """Executor-side marker writes must be visible via has_flag and
     removable via clear_flag (the idempotence contract every backend must

@@ -444,6 +444,99 @@ def test_auto_compaction_bounds_log_files(engine):
     assert all(r["status"] == "succeeded" for r in rows)
 
 
+def test_claim_committed_under_lock_without_spark_write(engine, monkeypatch):
+    """The trigger collects its claim plan under the per-queue claim_lock
+    and commits it through append_rows before the lock is released; it
+    issues no Spark write and does not read the claim back."""
+    from contextlib import contextmanager
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    engine.bulk_enqueue(
+        "default", [("EchoWorker", "perform", [i]) for i in range(3)], now=T0
+    )
+    store = engine.store
+    held: set[str] = set()
+    events = []
+    real_lock, real_append = store.claim_lock, store.append_rows
+    real_plan = engine.claim_plan
+
+    @contextmanager
+    def claim_lock(queue):
+        with real_lock(queue):
+            held.add(queue)
+            try:
+                yield
+            finally:
+                held.discard(queue)
+
+    def append_rows(rows):
+        events.append(("append", {r["status"] for r in rows}, "default" in held))
+        return real_append(rows)
+
+    def claim_plan(*args, **kwargs):
+        events.append(("plan", None, "default" in held))
+        return real_plan(*args, **kwargs)
+
+    def no_write(*args, **kwargs):
+        raise AssertionError("the trigger issued a Spark write")
+
+    def no_read_back(paths):
+        raise AssertionError("the trigger read its claim back")
+
+    monkeypatch.setattr(store, "claim_lock", claim_lock)
+    monkeypatch.setattr(store, "append_rows", append_rows)
+    monkeypatch.setattr(store, "read_rows", no_read_back)
+    monkeypatch.setattr(engine, "claim_plan", claim_plan)
+    monkeypatch.setattr(DataFrameWriter, "parquet", no_write)
+    assert engine.run_once("default", now=T0 + 1)["succeeded"] == 3
+    assert events == [
+        ("plan", None, True),
+        ("append", {"processing"}, True),
+        ("append", {"succeeded"}, False),
+    ]
+
+
+def test_claim_durable_before_dispatch(spark, tmp_path):
+    """The claim is committed before any worker runs: a worker, running on
+    the executor, finds its own `processing` record in a committed log
+    file."""
+    store_path = str(tmp_path / "jobs_durable")
+    journal = str(tmp_path / "durable.jsonl")
+    registry = WorkerRegistry()
+
+    @registry.register("Check")
+    def check(token):
+        import os
+
+        import pyarrow.parquet as pq
+
+        found = False
+        for name in os.listdir(store_path):
+            if name.endswith(".parquet") and not name.startswith("."):
+                recs = pq.read_table(
+                    os.path.join(store_path, name), columns=["args", "status"]
+                ).to_pylist()
+                found = found or any(
+                    r["status"] == "processing" and json.loads(r["args"]) == [token]
+                    for r in recs
+                )
+        with open(journal, "a") as f:
+            f.write(json.dumps([token, found]) + "\n")
+
+    mgr = QueueManager(
+        spark,
+        JobStore(spark, store_path),
+        registry,
+        pipelines=[Pipeline(name="p", queue="q")],
+    )
+    mgr.bulk_enqueue("q", [("Check", "perform", [f"t{i}"]) for i in range(3)], now=T0)
+    assert mgr.run_once("p", now=T0 + 1)["succeeded"] == 3
+    with open(journal) as f:
+        seen = sorted(json.loads(line) for line in f)
+    assert seen == [[f"t{i}", True] for i in range(3)]
+
+
 def test_fetch_all(engine):
     engine.enqueue("default", "EchoWorker", [1], now=T0)
     engine.enqueue("default", "FailWorker", [], now=T0)

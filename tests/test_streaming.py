@@ -708,6 +708,146 @@ def test_resume_drains_without_new_arrivals(runner_env):
     assert _status_counts(manager) == {"succeeded": 3}
 
 
+def test_runner_retriggers_while_claims_find_work(spark, tmp_path):
+    """Demand replenishment (producer.ex:117-152,180-191): a trigger that
+    claims work is followed at once by the next, so a backlog of
+    3 x max_demand drains in consecutive triggers within seconds, not one
+    claim per 30 s trigger/poll interval."""
+    registry = WorkerRegistry()
+    registry.register("NoopWorker", lambda *a: None)
+    store = JobStore(spark, str(tmp_path / "jobs_rt"))
+    pipeline = Pipeline(name="rt", queue="rtq", max_demand=5)
+    manager = QueueManager(spark, store, registry, pipelines=[pipeline])
+    runner = PipelineRunner(
+        spark, manager, pipeline,
+        checkpoint_dir=str(tmp_path / "ckpt_rt"),
+        trigger_seconds=30.0, poll_seconds=30.0,
+    )
+    manager.bulk_enqueue("rtq", [("NoopWorker", "perform", [i]) for i in range(15)])
+    try:
+        runner.start()
+        deadline = time.time() + 15
+        while time.time() < deadline:
+            if _status_counts(manager).get("succeeded") == 15:
+                break
+            time.sleep(0.2)
+        assert _status_counts(manager) == {"succeeded": 15}
+        assert runner.batches_run >= 3
+    finally:
+        runner.stop()
+
+
+def test_paused_runner_does_not_spin(runner_env):
+    """A paused tick claims nothing, so the poll loop waits poll_seconds
+    after it instead of re-triggering: the tick count stays bounded."""
+    manager, runner = runner_env
+    ticks = []
+    real_is_paused = manager.is_paused
+
+    def is_paused(p):
+        ticks.append(time.time())
+        return real_is_paused(p)
+
+    manager.is_paused = is_paused
+    manager.pause("stream")
+    manager.bulk_enqueue("sq", [("NoopWorker", "perform", [i]) for i in range(3)])
+    runner.start()
+    runner.await_idle()
+    n0 = len(ticks)
+    time.sleep(2.0)
+    # ~8 polls at 0.25 s; a spinning loop would tick thousands of times
+    assert len(ticks) - n0 <= 16
+    assert _status_counts(manager) == {"pending": 3}
+
+
+def test_poll_thread_survives_failed_trigger(runner_env):
+    """A poll trigger that raises is logged and the loop keeps polling: a
+    scheduled job (no file arrives when it becomes due, so only the poll
+    loop can claim it) still drains."""
+    import threading
+
+    from flume_spark.queue.logger import RecordingLogger
+
+    manager, runner = runner_env
+    manager.logger = RecordingLogger()
+    real_run_once = manager.run_once
+    failed = []
+
+    def flaky(pipeline, now=None):
+        if not failed and threading.current_thread().name.startswith("flume-poll"):
+            failed.append(time.time())
+            raise RuntimeError("transient store outage")
+        return real_run_once(pipeline, now=now)
+
+    manager.run_once = flaky
+    manager.enqueue_in("sq", 1.5, "NoopWorker", ["later"])
+    runner.start()
+    deadline = time.time() + 20
+    while time.time() < deadline:
+        if _status_counts(manager).get("succeeded") == 1:
+            break
+        time.sleep(0.2)
+    assert failed, "the poll loop never ran a trigger"
+    assert _status_counts(manager) == {"succeeded": 1}
+    errors = [m for level, m, _ in manager.logger.lines if level == "error"]
+    assert any("transient store outage" in m for m in errors), errors
+
+
+def test_two_busy_runners_still_compact(spark, tmp_path):
+    """Compaction needs a moment with no trigger in flight on the manager;
+    two runners re-triggering back to back must not starve it — it runs
+    while both backlogs are still draining."""
+    journal = str(tmp_path / "journal_cmp.txt")
+
+    def track(tag):
+        with open(journal, "a") as fh:
+            fh.write(tag + "\n")
+
+    def done():
+        try:
+            with open(journal) as fh:
+                return sum(1 for _ in fh)
+        except FileNotFoundError:
+            return 0
+
+    registry = WorkerRegistry()
+    registry.register("TrackWorker", track)
+    store = JobStore(spark, str(tmp_path / "jobs_cmp"))
+    p1 = Pipeline(name="c1", queue="ca", max_demand=2)
+    p2 = Pipeline(name="c2", queue="cb", max_demand=2)
+    manager = QueueManager(
+        spark, store, registry, pipelines=[p1, p2], compact_max_files=8
+    )
+    compacted_at = []
+    real_compact = store.compact
+
+    def compact(**kwargs):
+        compacted_at.append(done())
+        return real_compact(**kwargs)
+
+    store.compact = compact
+    runners = [
+        PipelineRunner(
+            spark, manager, p,
+            checkpoint_dir=str(tmp_path / f"ck_{p.name}"), trigger_seconds=0.2,
+        )
+        for p in (p1, p2)
+    ]
+    manager.bulk_enqueue("ca", [("TrackWorker", "perform", [f"a{i}"]) for i in range(20)])
+    manager.bulk_enqueue("cb", [("TrackWorker", "perform", [f"b{i}"]) for i in range(20)])
+    try:
+        for r in runners:
+            r.start()
+        deadline = time.time() + 60
+        while done() < 40 and time.time() < deadline:
+            time.sleep(0.2)
+    finally:
+        for r in runners:
+            r.stop()
+    assert _status_counts(manager) == {"succeeded": 40}
+    assert compacted_at and min(compacted_at) < 40, compacted_at
+
+
 def test_scheduled_job_runs_when_due_without_arrivals(runner_env):
     """A job scheduled for the future becomes due with NO new file arriving;
     the poll timer must claim it (≙ the reference scheduler loop)."""
